@@ -116,3 +116,28 @@ def test_flight_url_binds_free_port():
     u = FlightUrl()
     assert u.port > 0
     assert u.to_location() == f"grpc://127.0.0.1:{u.port}"
+
+
+def test_do_exchange_keeps_nullable_int64_and_decimal(spark, server):
+    """The exchanged table binds straight from Arrow: a pandas hop would
+    turn a nullable int64 into double and narrow decimal(10,2)."""
+    from decimal import Decimal
+
+    server.register_expr("pass_through", xo.table({"i": "int64", "d": "decimal(10,2)"}, "input"))
+    table = pa.table({
+        "i": pa.array([1, None, 3], pa.int64()),
+        "d": pa.array([Decimal("1.25"), None, Decimal("2.50")], pa.decimal128(10, 2)),
+    })
+    out = flight_exchange(server.endpoint, "pass_through", table)
+    assert out.schema == table.schema
+    assert out.sort_by("i").equals(table.sort_by("i"))
+
+
+def test_register_expr_keeps_each_unbound_name(spark, server):
+    """A second unbound expression with its own unbound name on the same
+    server: each exchange binds its own expression's name."""
+    maxes = xo.table({"g": "string", "v": "float64"}, "other_input").agg(m=_.v.max())
+    server.register_expr("max_v", maxes, "other_input")
+    table = pa.table({"g": ["a", "a"], "v": [1.0, 4.0]})
+    assert flight_exchange(server.endpoint, "max_v", table).column("m").to_pylist() == [4.0]
+    assert flight_exchange(server.endpoint, "sum_by_g", table).column("s").to_pylist() == [5.0]

@@ -21,6 +21,16 @@ Not `df.cache()` (session-local memory pin): artifacts persist across
 processes and sessions, keyed by plan content. On a cluster the cache
 root would be object storage (s3://...); everything here goes through
 Spark's Hadoop FS layer via plain paths.
+
+Artifact reads (hit, read-back after a miss, CacheTag) go through the
+Parquet schema memo of expr/core.scan_parquet: a schema-less read makes
+Spark run a footer-scan job, so the memo keeps the schema Spark inferred,
+per session, keyed on the paths, their mtime+size stat tokens and the
+session confs Parquet schema inference reads. A repeated read then plans
+with no job. This makes the `mtime` strategy's assumption: same mtime and
+size, same file. A miss seeds the memo at publish with the written
+frame's schema, so the read-back scans no footer either. URI roots
+(ObjectStoreCache) and missing paths still infer through Spark.
 """
 
 from __future__ import annotations
@@ -138,7 +148,7 @@ def lower_cached_node(node: N.CachedNode, spark: SparkSession, bindings) -> Data
     """get-or-set_default (reference: Cache.set_default,
     caching/__init__.py:34): swap subtree for the artifact on hit,
     materialize on miss."""
-    from xorq_spark.expr.core import lower
+    from xorq_spark.expr.core import lower, scan_parquet
 
     base_strategy, _ = split_strategy(node.strategy)
     if base_strategy == "dummy":
@@ -182,7 +192,7 @@ def lower_cached_node(node: N.CachedNode, spark: SparkSession, bindings) -> Data
     if not _is_fresh(key, node.strategy, spark):
         df = lower(node.parent, spark, bindings)
         _publish_artifact(df, path)
-    return spark.read.parquet(path)
+    return scan_parquet(spark, (path,))
 
 
 def _publish_artifact(df: DataFrame, path: str) -> None:
@@ -246,6 +256,12 @@ def _publish_artifact(df: DataFrame, path: str) -> None:
         # another process published the same key first — its bytes are
         # identical by construction; drop ours
         shutil.rmtree(tmp, ignore_errors=True)
+    # The read-back needs no footer scan: Spark reads a user-given file
+    # schema as nullable, so the written frame's schema is exactly what
+    # inference would return for the artifact.
+    from xorq_spark.expr.core import seed_parquet_schema
+
+    seed_parquet_schema(df.sparkSession, (path,), df.schema)
 
 
 # --------------------------------------------------------------------------

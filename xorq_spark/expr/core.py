@@ -12,6 +12,7 @@ translation). Execution entry points mirror expr/api.py:294
 from __future__ import annotations
 
 import itertools
+import weakref
 from typing import Any, Callable, Dict, Iterable, Optional
 
 import pyspark.sql.functions as F
@@ -29,6 +30,7 @@ from xorq_spark.expr.deferred import (
     lower_value,
     unwrap,
 )
+from xorq_spark.tokenize import stat_token
 
 # Memtable payload registry: content-token -> pyarrow.Table
 _MEMTABLES: Dict[str, Any] = {}
@@ -41,6 +43,77 @@ def register_memtable(token: str, arrow_table) -> None:
 
 def get_memtable(token: str):
     return _MEMTABLES[token]
+
+
+# --------------------------------------------------------------------------
+# Parquet schema memo
+# --------------------------------------------------------------------------
+# session -> {paths: (fingerprint, StructType)}. A Parquet read without a
+# schema makes Spark run a footer-merge job to infer one (60-90 ms on a
+# warm local[4] session on a 4-core VM); handing Spark its own earlier
+# answer plans the same scan with no job. Weak keys, as queries/base._TABLE_MEMO:
+# a stopped session releases its entries.
+_SCHEMA_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+# The session confs Spark's Parquet schema inference reads: the flags of
+# ParquetToSparkSchemaConverter(SQLConf), plus mergeSchema. Read one by
+# one: spark.conf.getAll costs tens of ms a call.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _schema_fingerprint(spark: SparkSession, paths: tuple) -> Optional[tuple]:
+    """What Spark's inferred schema of `paths` depends on: each path's
+    mtime+size stat token and the inference confs. None means the memo
+    steps aside: a URI cannot be stat'ed locally, and a missing path must
+    keep Spark's own error."""
+    if any("://" in p for p in paths):
+        return None
+    stats = tuple(stat_token(p) for p in paths)
+    if any(":absent" in s for s in stats):
+        return None
+    return stats + tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+
+
+def scan_parquet(spark: SparkSession, paths: tuple) -> DataFrame:
+    """`spark.read.parquet(*paths)`, reusing the schema Spark inferred
+    for the same paths while neither their files nor the inference confs
+    changed (the mtime cache strategy's assumption: same mtime and size,
+    same file). One entry per path tuple, overwritten on change.
+
+    Concurrent callers (Flight serves on threads) need no lock: a schema
+    is kept only when the fingerprint is the same after Spark's inference
+    as before it, so a file replaced or a conf set by another thread
+    meanwhile is never remembered, and a lost update costs one more
+    inference."""
+    fp = _schema_fingerprint(spark, paths)
+    if fp is None:
+        return spark.read.parquet(*paths)
+    memo = _SCHEMA_MEMO.setdefault(spark, {})
+    hit = memo.get(paths)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    if _schema_fingerprint(spark, paths) == fp:
+        memo[paths] = (fp, df.schema)
+    return df
+
+
+def seed_parquet_schema(spark: SparkSession, paths: tuple, schema) -> None:
+    """Record `schema` as what Spark would infer for `paths` as they are
+    now, so the next scan_parquet of them reads no footer."""
+    fp = _schema_fingerprint(spark, paths)
+    if fp is not None:
+        _SCHEMA_MEMO.setdefault(spark, {})[paths] = (fp, schema)
 
 
 # --------------------------------------------------------------------------
@@ -88,10 +161,9 @@ def lower(
         return lambda name: df[name]
 
     if isinstance(node, N.ReadParquet):
-        r = spark.read
         if node.schema:
-            r = r.schema(schema_to_struct(node.schema))
-        return r.parquet(*node.paths)
+            return spark.read.schema(schema_to_struct(node.schema)).parquet(*node.paths)
+        return scan_parquet(spark, node.paths)
     if isinstance(node, N.ReadCSV):
         r = spark.read.options(**dict(node.options))
         if node.schema:
@@ -139,7 +211,7 @@ def lower(
         # ObjectStoreCache must read the URI root it was pinned under,
         # not the process-local cache_root
         _, _root = split_strategy(node.strategy)
-        return spark.read.parquet(artifact_path(node.key, _root))
+        return scan_parquet(spark, (artifact_path(node.key, _root),))
     if isinstance(node, N.Tag):
         return rec(node.parent)
     if isinstance(node, N.Project):

@@ -76,11 +76,12 @@ if HAVE_FLIGHT:
             super().__init__(location, middleware=middleware)
             self.spark = spark
             self._exprs: Dict[str, Expr] = {}
+            self._unbound_names: Dict[str, str] = {}
 
         # -- registry -------------------------------------------------------
         def register_expr(self, name: str, expr: Expr, unbound_name: str = "input"):
             self._exprs[name] = expr
-            self._unbound_name = unbound_name
+            self._unbound_names[name] = unbound_name
             return self
 
         @property
@@ -91,9 +92,10 @@ if HAVE_FLIGHT:
         def do_exchange(self, context, descriptor, reader, writer):
             name = descriptor.command.decode()
             expr = self._exprs[name]
-            in_table = reader.read_all()
-            df = self.spark.createDataFrame(in_table.to_pandas())
-            out = expr.to_spark(self.spark, bindings={self._unbound_name: df})
+            # bind straight from Arrow: a pandas hop turns a nullable
+            # int64 into double and narrows decimal precision
+            df = self.spark.createDataFrame(reader.read_all())
+            out = expr.to_spark(self.spark, bindings={self._unbound_names[name]: df})
             result = out.toArrow()
             writer.begin(result.schema)
             writer.write_table(result)

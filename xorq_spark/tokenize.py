@@ -31,7 +31,7 @@ def _source_paths(node: N.RNode) -> tuple:
     return ()
 
 
-def _stat_token(path: str) -> str:
+def stat_token(path: str) -> str:
     """mtime+size fingerprint of a file/dir/glob (directories: every file
     under them, sorted). Missing paths tokenize as 'absent' rather than
     erroring — the read itself will fail later with a better message."""
@@ -102,7 +102,7 @@ def _norm_node(node: N.RNode, strategy: str) -> tuple:
         ),
     )
     if strategy == "mtime":
-        stats = tuple(_stat_token(p) for p in _source_paths(node))
+        stats = tuple(stat_token(p) for p in _source_paths(node))
         if stats:
             body = body + (("__stat__", stats),)
     return body
