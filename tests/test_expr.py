@@ -125,6 +125,24 @@ def test_memtable_and_join(spark):
     assert got.w.tolist() == [20.0, 30.0]
 
 
+def test_register_arrow_keeps_nullable_int64_and_decimal(spark):
+    """An Arrow table binds straight from Arrow: a pandas hop would turn
+    a nullable int64 into double."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    table = pa.table({
+        "i": pa.array([1, None, 3], pa.int64()),
+        "d": pa.array([Decimal("1.25"), None, Decimal("2.50")], pa.decimal128(10, 2)),
+    })
+    e = xo.register(spark, table, "arrow_nullable_src")
+    assert dict(spark.table("arrow_nullable_src").dtypes) == {"i": "bigint", "d": "decimal(10,2)"}
+    got = e.order_by("i").execute(spark)
+    assert got.i.isna().tolist() == [True, False, False]
+    assert got.d.tolist()[1:] == [Decimal("1.25"), Decimal("2.50")]
+
+
 def test_unbound_table_binding(spark):
     t = xo.table({"x": "int64", "y": "float64"}, "inp")
     e = t.group_by("x").agg(s=_.y.sum())

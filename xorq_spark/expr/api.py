@@ -159,7 +159,8 @@ def register(spark, source, table_name: str) -> Expr:
         else:
             df = spark.read.parquet(source)
     elif isinstance(source, pa.Table):
-        df = spark.createDataFrame(source.to_pandas())
+        # straight from Arrow: a pandas hop turns nullable int64 into double
+        df = spark.createDataFrame(source)
     elif hasattr(source, "toPandas"):  # spark DataFrame
         df = source
     elif hasattr(source, "columns"):  # pandas

@@ -19,52 +19,23 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from xorq_spark.functions.multimodal import extract_features
-from xorq_spark.queries.base import query, t, widen
+from xorq_spark.queries.base import pinned_order, query, t, widen
 
 
-def _fixture_ids(spark, sf_dir, bound: int, npar: int = None):
+def _fixture_ids(spark, sf_dir, bound: int, npar: int = 4):
     """Asset-id frame for the codec fixture queries, rebalanced to a
-    FEW compute partitions (not cluster width): the codec work is a
-    (now fused, round 10) Python stage, and at this asset count the
-    per-task Python-runner round-trips of a 32-way layout cost more
-    than the codec work itself — round-9 npar sweep at sf0.1:
-    progressive JPEG 0.82s serial / 0.54s 8-way / 0.90s 32-way; FLAC
-    0.37 / 0.45 / 0.83. After the round-10 DCT vectorization + stage
-    fusion the codec CPU is ~10x smaller, so the width was re-measured
-    (XORQ_MM_FIXTURE_NPAR A/B hook; interleaved 8-vs-4 over all nine
-    fixture queries: 4 wins/ties 7 of 9, geomean -6%) and the default
-    dropped to 4. At real scale asset tables arrive in many splits and
+    FEW compute partitions (not cluster width): the codec work is one
+    fused Python stage, and at this asset count per-task Python-runner
+    round-trips cost more than the codec work itself. Interleaved
+    8-vs-4 over all nine fixture queries: 4 wins or ties 7 of 9,
+    geomean -6%. At real scale asset tables arrive in many splits and
     the per-task batch is what amortizes the boundary (guide SS4.1)."""
-    import os
-
-    if npar is None:
-        npar = int(os.environ.get("XORQ_MM_FIXTURE_NPAR", "4"))
     return (
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < bound)
         .select(F.col("doc_id").alias("asset_id"))
         .repartition(npar)
     )
-
-
-def _pinned_order(df, *cols):
-    """Pin a Python-stage pipeline's output before the final global
-    sort (round 9, guide §1.4/§2): ``orderBy`` plans a range exchange
-    whose RangePartitioner SAMPLING pass re-executes the entire child
-    — and a codec pipeline has no intermediate shuffle for the sample
-    to reuse, so every encode+decode Python stage ran TWICE per
-    action (measured: mjpeg 1.27 s -> 0.72 s with the pin). The lazy
-    localCheckpoint materializes the decoded rows once inside the
-    same job chain; the sample and the sort then read the pinned RDD.
-    Row content and final order are bit-identical (same orderBy).
-    XORQ_PIN_ORDER=0 restores plain orderBy (round 10 — the shared
-    A/B / plan-inspection hook queries.base.pinned_order honors)."""
-    import os
-
-    if os.environ.get("XORQ_PIN_ORDER", "1") == "0":
-        return df.orderBy(*cols)
-    return df.localCheckpoint(eager=False).orderBy(*cols)
-
 
 
 @query(
@@ -101,7 +72,7 @@ def mm_extract_features(spark, sf_dir):
             lambda x: F.round((x + 1.0) / 2.0 * 255.0).cast("int"),
         ).alias("emb_bytes"),
     )
-    return _pinned_order(out, "doc_id")
+    return pinned_order(out, "doc_id")
 
 
 @query(
@@ -177,7 +148,7 @@ def mm_resize_plan(spark, sf_dir):
         (240 + (F.col("doc_id") % 5) * 60).cast("int").alias("height"),
         F.lit(None).cast("int").alias("duration_ms"),
     )
-    return _pinned_order(
+    return pinned_order(
         resize_images(assets, box=64).select(
             F.col("asset_id").alias("doc_id"),
             "out_width",
@@ -218,7 +189,7 @@ def mm_decode_png_stats(spark, sf_dir):
     )
 
     ids = _fixture_ids(spark, sf_dir, 64)
-    return _pinned_order(
+    return pinned_order(
         decode_image_stats(synth_png_assets(ids)).drop("px_sha256"),
         "asset_id",
     )
@@ -259,7 +230,7 @@ def mm_decode_jpeg_stats(spark, sf_dir):
     )
 
     ids = _fixture_ids(spark, sf_dir, 64)
-    return _pinned_order(
+    return pinned_order(
         decode_image_stats(synth_jpeg_assets(ids)).drop("px_sha256"),
         "asset_id",
     )
@@ -311,7 +282,7 @@ def mm_decode_jpeg_progressive(spark, sf_dir):
         decode_image_stats_batches(),
         PIXEL_STATS_SCHEMA,
     )
-    return _pinned_order(stats.drop("px_sha256"), "asset_id")
+    return pinned_order(stats.drop("px_sha256"), "asset_id")
 
 
 @query(
@@ -352,7 +323,7 @@ def mm_resize_decoded(spark, sf_dir):
     )
 
     ids = _fixture_ids(spark, sf_dir, 64)
-    return _pinned_order(
+    return pinned_order(
         resize_images_decoded(synth_png_assets(ids), box=6), "asset_id"
     )
 
@@ -407,7 +378,7 @@ def mm_decode_wav_stats(spark, sf_dir):
 
     ids = _fixture_ids(spark, sf_dir, 64)
     assets = synth_wav_assets(ids)
-    return _pinned_order(
+    return pinned_order(
         decode_audio_stats(assets).drop("pcm_sha256"), "asset_id"
     )
 
@@ -457,7 +428,7 @@ def mm_decode_avi_frames(spark, sf_dir):
         decode_video_stats_batches(),
         VIDEO_STATS_SCHEMA,
     )
-    return _pinned_order(stats, "asset_id", "frame_idx")
+    return pinned_order(stats, "asset_id", "frame_idx")
 
 
 @query(
@@ -664,7 +635,7 @@ def mm_decode_webp_stats(spark, sf_dir):
         decode_image_stats_batches(),
         PIXEL_STATS_SCHEMA,
     )
-    return _pinned_order(stats.drop("px_sha256"), "asset_id")
+    return pinned_order(stats.drop("px_sha256"), "asset_id")
 
 
 @query(
@@ -717,7 +688,7 @@ def mm_decode_gif_stats(spark, sf_dir):
         decode_gif_stats_batches(),
         GIF_STATS_SCHEMA,
     )
-    return _pinned_order(stats, "asset_id")
+    return pinned_order(stats, "asset_id")
 
 
 @query(
@@ -781,7 +752,7 @@ def mm_decode_flac_stats(spark, sf_dir):
         decode_audio_stats_batches(),
         AUDIO_STATS_SCHEMA,
     )
-    return _pinned_order(stats.drop("pcm_sha256"), "asset_id")
+    return pinned_order(stats.drop("pcm_sha256"), "asset_id")
 
 
 @query(
@@ -841,7 +812,7 @@ def mm_audio_resample(spark, sf_dir):
     )
 
     ids = _fixture_ids(spark, sf_dir, 64)
-    return _pinned_order(
+    return pinned_order(
         resample_audio_stats(synth_flac_assets(ids), 16000), "asset_id"
     )
 
@@ -911,7 +882,7 @@ def mm_audio_energy_segments(spark, sf_dir):
     )
 
     ids = _fixture_ids(spark, sf_dir, 64)
-    return _pinned_order(
+    return pinned_order(
         audio_segment_stats(synth_wav_assets(ids), 16), "asset_id"
     )
 
@@ -993,7 +964,7 @@ def mm_probe_mp3_stats(spark, sf_dir):
         probe_mp3_stats_batches(),
         MP3_PROBE_SCHEMA,
     )
-    return _pinned_order(stats, "asset_id")
+    return pinned_order(stats, "asset_id")
 
 
 @query(
@@ -1047,7 +1018,7 @@ def mm_decode_mjpeg_frames(spark, sf_dir):
         decode_mjpeg_frame_stats_batches(),
         MJPEG_FRAME_SCHEMA,
     )
-    return _pinned_order(stats, "asset_id", "frame_id")
+    return pinned_order(stats, "asset_id", "frame_id")
 
 
 @query(
@@ -1111,7 +1082,7 @@ def mm_extract_pdf_text(spark, sf_dir):
         extract_pdf_text_stats_batches(),
         PDF_TEXT_SCHEMA,
     )
-    return _pinned_order(stats, "asset_id")
+    return pinned_order(stats, "asset_id")
 
 
 @query(
@@ -1173,7 +1144,7 @@ def mm_extract_docx_text(spark, sf_dir):
     )
 
     ids = _fixture_ids(spark, sf_dir, 48)
-    return _pinned_order(
+    return pinned_order(
         extract_docx_text_stats(synth_docx_assets(ids)), "asset_id"
     )
 
@@ -1228,7 +1199,7 @@ def mm_extract_epub_text(spark, sf_dir):
     )
 
     ids = _fixture_ids(spark, sf_dir, 48)
-    return _pinned_order(
+    return pinned_order(
         extract_epub_text_stats(synth_epub_assets(ids)), "asset_id"
     )
 
@@ -1279,6 +1250,6 @@ def mm_extract_rtf_text(spark, sf_dir):
     )
 
     ids = _fixture_ids(spark, sf_dir, 48)
-    return _pinned_order(
+    return pinned_order(
         extract_rtf_text_stats(synth_rtf_assets(ids)), "asset_id"
     )
