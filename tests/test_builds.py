@@ -177,6 +177,33 @@ def test_build_writes_profile_and_run_reconnects(spark, sf_dir, tmp_path):
     assert s is not None and s.sql("SELECT 1").collect()[0][0] == 1
 
 
+def test_profile_leaves_out_host_gated_conf(src, tmp_path, monkeypatch):
+    """profile.yaml records only the portable conf: the scratch dir and
+    the worker daemon are gated on the host and master, so load_profile
+    must not replay them into connect() on another master."""
+    import yaml
+
+    from xorq_spark import builds, session
+
+    host_keys = ("spark.local.dir", "spark.python.daemon.module")
+    monkeypatch.setenv("XORQ_SPARK_MASTER", "local[2]")
+    monkeypatch.setenv("XORQ_SPARK_LOCAL_DIR", str(tmp_path / "scratch"))
+    monkeypatch.setattr(session, "_workers_import_package", lambda: True)
+    assert all(k in session.options() for k in host_keys)
+
+    d = build(xo.deferred_read_parquet(src), str(tmp_path / "b"))
+    prof = yaml.safe_load(open(f"{d}/profile.yaml"))
+    assert "spark.sql.adaptive.enabled" in prof["conf"]
+    assert not set(host_keys) & set(prof["conf"])
+
+    calls = []
+    monkeypatch.setattr(session, "connect", lambda **kw: calls.append(kw))
+    monkeypatch.setenv("XORQ_SPARK_MASTER", "spark://h:7077")
+    builds.load_profile(d)
+    assert calls[0]["master"] == "spark://h:7077"
+    assert not set(host_keys) & set(calls[0]["extra_conf"])
+
+
 def test_cli_run_cached(src, tmp_path):
     script = tmp_path / "pipeline.py"
     script.write_text(

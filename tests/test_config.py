@@ -19,6 +19,7 @@ def _reset_options():
     options.repr.interactive.max_columns = None
     options.repr.interactive.max_string = 80
     options.repr.interactive.show_types = True
+    options.cache.default_relative_path = ".xorq_cache"
 
 
 def test_singleton_and_spelling():
@@ -49,10 +50,37 @@ def test_validation():
     assert options.repr.interactive.max_columns == 3
 
 
-def test_cache_and_sql_groups():
+def test_cache_and_sql_groups(monkeypatch, tmp_path):
+    from xorq_spark.cache import cache_root
+
     assert options.sql.dialect == "spark"
-    assert isinstance(options.cache.default_relative_path, pathlib.Path)
-    assert options.cache.key_prefix.endswith("-")
+    assert options.cache.default_relative_path == pathlib.Path(".xorq_cache")
+    # cache_root() reads the option (relative to the working directory)
+    # unless XORQ_SPARK_CACHE_DIR is set
+    monkeypatch.delenv("XORQ_SPARK_CACHE_DIR", raising=False)
+    monkeypatch.chdir(tmp_path)
+    assert cache_root() == str(tmp_path / ".xorq_cache")
+    options.cache.default_relative_path = "elsewhere/cache"
+    assert cache_root() == str(tmp_path / "elsewhere" / "cache")
+    monkeypatch.setenv("XORQ_SPARK_CACHE_DIR", str(tmp_path / "env"))
+    assert cache_root() == str(tmp_path / "env")
+    with pytest.raises(AttributeError, match="unknown option"):
+        options.cache.key_prefix = "p-"
+
+
+def test_env_names_match_readme_table():
+    """Every XORQ_* name the library reads is in README's Configuration
+    table, and the table lists no other name."""
+    import re
+
+    root = pathlib.Path(xo.__file__).parent
+    used = set()
+    for path in root.rglob("*.py"):
+        used |= set(re.findall(r"XORQ_[A-Z0-9_]+", path.read_text()))
+    readme = (root.parent / "README.md").read_text()
+    section = readme.split("\n## Configuration\n", 1)[1].split("\n## ", 1)[0]
+    documented = set(re.findall(r"^\| `(XORQ_[A-Z0-9_]+)`", section, re.M))
+    assert used == documented
 
 
 def test_backend_property(spark):

@@ -5,13 +5,14 @@ canonicalization, null-safety, and plan-quality asserts."""
 from itertools import combinations
 
 import pyspark.sql.functions as F
+import pytest
 
 
-def _tri(spark, edges):
+def _tri(spark, edges, **kw):
     from xorq_spark.functions.graph import triangle_counts
 
     df = spark.createDataFrame(edges, "src long, dst long")
-    return {r["node"]: r for r in triangle_counts(df).collect()}
+    return {r["node"]: r for r in triangle_counts(df, **kw).collect()}
 
 
 def test_triangle_counts_k4_plus_pendant(spark):
@@ -28,10 +29,16 @@ def test_triangle_counts_k4_plus_pendant(spark):
     assert out[5]["n_triangles"] == 0 and out[5]["clustering_coef_e9"] == 0
 
 
-def test_triangle_counts_matches_bruteforce_reference(spark):
+@pytest.mark.parametrize("bound", [4_000_000, 0], ids=["bc_deg", "shuffled_deg"])
+@pytest.mark.parametrize("offset", [0, 2**31, -1000],
+                         ids=["encoded", "struct", "negative_struct"])
+def test_triangle_counts_matches_bruteforce_reference(spark, offset, bound):
     # deterministic pseudo-random graph; compare against an O(n^3)
-    # Python model
-    nodes = list(range(30))
+    # Python model. Node ids shifted by `offset` pick the orientation
+    # key: ids in [0, 2^31) take the long-encoded path, others the
+    # struct path. broadcast_edge_bound=0 takes the shuffled degree
+    # attach (and keeps AQE on).
+    nodes = [n + offset for n in range(30)]
     edges = [
         (u, v)
         for u, v in combinations(nodes, 2)
@@ -46,7 +53,7 @@ def test_triangle_counts_matches_bruteforce_reference(spark):
         for n in nodes
         if adj[n]
     }
-    out = _tri(spark, edges)
+    out = _tri(spark, edges, broadcast_edge_bound=bound)
     assert {n: r["n_triangles"] for n, r in out.items()} == expected
     assert {n: r["degree"] for n, r in out.items()} == {
         n: len(adj[n]) for n in nodes if adj[n]

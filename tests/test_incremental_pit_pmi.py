@@ -710,26 +710,76 @@ def test_spearman_matches_reference(spark):
     assert abs(r["rho"] - round(num / den, 9)) < 1e-9
 
 
+def _bootstrap_partials_sql(d, B, P31, seed):
+    """All-SQL partial sums: the 2B+2-buffer codegen'd aggregate that
+    bootstrap_mean_ci ran before its Arrow stage, kept as the reference
+    the Arrow path must reproduce. Returns (per_b, wide)."""
+    from xorq_spark.functions.stats import _POISSON1_CDF_E6
+
+    two = d.select(
+        "__x",
+        F.expr(f"md5(concat('{seed}|', __k))").alias("__dig"),
+    ).select(
+        "__x",
+        F.expr(
+            f"CAST(conv(substring(__dig, 1, 8), 16, 10) AS BIGINT) % {P31}"
+        ).alias("__v1"),
+        # greatest(·, 1) remaps the ~2^-31 v2=0 row (whose 40 weights
+        # would otherwise all collapse to the same value) to stride 1;
+        # part of the committed contract the oracle replays
+        F.expr(
+            f"greatest(CAST(conv(substring(__dig, 17, 8), 16, 10) AS BIGINT)"
+            f" % {P31}, 1)"
+        ).alias("__v2"),
+    )
+    # Weight expressions are INLINED into the aggregate so the whole
+    # uniform -> inverse-CDF -> partial-sum chain lives inside the hash
+    # aggregate's codegen'd update loop. (Materializing 40 weight
+    # columns in a projection first defeats whole-stage codegen —
+    # measured 25s vs 3s at sf0.1 for identical results. The weight is
+    # the branchless #{thresholds <= u}, equal to the CASE-chain
+    # inverse-CDF index.)
+    aggs = [F.count(F.lit(1)).cast("long").alias("__n"),
+            F.sum("__x").alias("__sx")]
+    for b in range(1, B + 1):
+        u = f"((__v1 + __v2 * {b}) % {P31} % 1000000)"
+        wexpr = "(" + " + ".join(
+            f"CAST({u} >= {t} AS BIGINT)" for t in _POISSON1_CDF_E6
+        ) + ")"
+        aggs.append(
+            F.expr(f"CAST(sum({wexpr} * __x) AS BIGINT)").alias(f"__swx{b}")
+        )
+        aggs.append(F.expr(f"CAST(sum({wexpr}) AS BIGINT)").alias(f"__sw{b}"))
+    wide = two.agg(*aggs).localCheckpoint(eager=True)
+    per_struct = ",".join(
+        f"struct(CAST({b} AS INT) AS b, __swx{b} AS swx, __sw{b} AS sw)"
+        for b in range(1, B + 1)
+    )
+    per_b = (
+        wide.select(F.explode(F.expr(f"array({per_struct})")).alias("__p"))
+        .select(
+            F.col("__p.b").alias("__b"),
+            F.col("__p.swx").alias("__swx"),
+            F.col("__p.sw").alias("__sw"),
+        )
+        .where(F.col("__sw") > 0)
+    )
+    return per_b, wide
+
+
 def test_bootstrap_arrow_matches_sql(spark):
     """Round 10: the Arrow-stage partial sums must reproduce the SQL
-    aggregate's exact integers (same md5/Carter-Wegman/inverse-CDF
-    contract) on every output column."""
-    import os
-
-    from xorq_spark.functions.stats import bootstrap_mean_ci
+    reference aggregate's exact integers (same md5/Carter-Wegman/
+    inverse-CDF contract) on every output column."""
+    from xorq_spark.functions.stats import _bootstrap_readout, bootstrap_mean_ci
 
     rows = [(i * 37 % 501 - 250, f"k{i}") for i in range(777)]
     df = spark.createDataFrame(rows, "x long, k string")
-    prev = os.environ.get("XORQ_BOOTSTRAP_ARROW")
-    try:
-        os.environ["XORQ_BOOTSTRAP_ARROW"] = "1"
-        arrow = bootstrap_mean_ci(df, "x", "k", n_resamples=40).collect()
-        os.environ["XORQ_BOOTSTRAP_ARROW"] = "0"
-        sql = bootstrap_mean_ci(df, "x", "k", n_resamples=40).collect()
-    finally:
-        if prev is None:
-            os.environ.pop("XORQ_BOOTSTRAP_ARROW", None)
-        else:
-            os.environ["XORQ_BOOTSTRAP_ARROW"] = prev
+    arrow = bootstrap_mean_ci(df, "x", "k", n_resamples=40).collect()
+    d = df.select(
+        F.col("x").alias("__x"), F.col("k").alias("__k")
+    )
+    per_b, wide = _bootstrap_partials_sql(d, 40, (1 << 31) - 1, "bs")
+    sql = _bootstrap_readout(per_b, wide, 5, 95).collect()
     assert [tuple(r) for r in arrow] == [tuple(r) for r in sql]
     assert arrow[0]["n"] == 777

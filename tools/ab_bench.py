@@ -5,14 +5,17 @@ Usage: python tools/ab_bench.py <sf_dir> <query>[,<query>...] [passes]
 Runs the named queries with the bench's noop-sink methodology (one
 untimed warm pass, then `passes` timed passes, default 4) and prints a
 per-pass seconds table plus min/median. The host swings 1x-4x on a
-minutes timescale, so cross-window comparisons are invalid — to A/B a
-code change, toggle it via an env flag read at query-build time and run
-BOTH variants alternately inside ONE invocation:
+minutes timescale, so cross-window comparisons are invalid. To sample
+two variants in the same host window, run them alternately inside ONE
+invocation:
 
-    XORQ_AB_FLAG=... python tools/ab_bench.py ... --ab NAME=old,new
+    python tools/ab_bench.py <sf_dir> <query> [passes] --ab=NAME:old,new
 
 With --ab, each timed pass alternates the env var NAME between the two
-values (old first), so both variants sample the same host window.
+values (old first). NAME is a temporary flag read at query-build time
+while a change is being measured; such a flag is scaffolding and is
+never committed. The committed way to measure a change is interleaved
+runs of the parent commit and the change, each from its own checkout.
 """
 
 import os

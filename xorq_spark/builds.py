@@ -212,12 +212,14 @@ def build(expr: Expr, builds_dir: str = "builds") -> str:
         f.write(f"pyspark=={spark_version}\npyarrow\npandas\n")
     # Connection profile so `run` on another machine reconnects the same
     # way (profiles.yaml analog, vendor/ibis/backends/profiles.py:120).
-    # Spark's "connection" is the session conf: master + analytic opts.
-    from xorq_spark.session import options as session_options
+    # Spark's "connection" is the session conf: master + the portable
+    # analytic opts. The host-gated entries (scratch dir, worker daemon)
+    # are left out: connect() recomputes them for the master it is given.
+    from xorq_spark.session import analytic_options
 
     profile = {
         "master": os.environ.get("XORQ_SPARK_MASTER", "local[*]"),
-        "conf": session_options(),
+        "conf": analytic_options(),
     }
     with open(os.path.join(out, "profile.yaml"), "w") as f:
         yaml.safe_dump(profile, f, sort_keys=False)

@@ -42,13 +42,17 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from xorq_spark.config import options
 from xorq_spark.expr import nodes as N
 from xorq_spark.tokenize import tokenize
 
 
 def cache_root() -> str:
-    return os.environ.get(
-        "XORQ_SPARK_CACHE_DIR", os.path.join(os.getcwd(), ".xorq_cache")
+    """XORQ_SPARK_CACHE_DIR if set, else
+    ``xo.options.cache.default_relative_path`` under the working
+    directory."""
+    return os.environ.get("XORQ_SPARK_CACHE_DIR") or os.path.join(
+        os.getcwd(), options.cache.default_relative_path
     )
 
 

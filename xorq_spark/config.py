@@ -155,32 +155,19 @@ class Cache(Config):
     """Cache configuration (reference: xorq/config.py Cache).
 
     ``default_relative_path`` is where cache artifacts land relative to
-    the working directory when no absolute root is configured;
-    ``key_prefix`` is prepended to every cache key, letting two
-    pipelines share a cache directory without collisions.
+    the working directory when ``XORQ_SPARK_CACHE_DIR`` is unset (read
+    by ``cache.cache_root()`` at each lookup).
     """
 
-    __slots__ = ("_default_relative_path", "_key_prefix")
+    __slots__ = ("_default_relative_path",)
 
     @property
     def default_relative_path(self):
-        return getattr(
-            self, "_default_relative_path", pathlib.Path(".cache") / "xorq_spark"
-        )
+        return getattr(self, "_default_relative_path", pathlib.Path(".xorq_cache"))
 
     @default_relative_path.setter
     def default_relative_path(self, value):
         object.__setattr__(self, "_default_relative_path", pathlib.Path(value))
-
-    @property
-    def key_prefix(self) -> str:
-        return getattr(self, "_key_prefix", "xorq_spark-")
-
-    @key_prefix.setter
-    def key_prefix(self, value: str):
-        if not isinstance(value, str):
-            raise TypeError(f"key_prefix must be a str, got {value!r}")
-        object.__setattr__(self, "_key_prefix", value)
 
 
 class Options(Config):

@@ -27,6 +27,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from xorq_spark.operators.partitioning import widen
+
 DEFAULT_SCALE = 10**12
 
 
@@ -36,27 +38,6 @@ DEFAULT_SCALE = 10**12
 # promoted to session.py once non-graph bounded tails (HDR readout)
 # wanted the same treatment.
 from xorq_spark.session import static_compile as _static_rounds
-
-
-def _widen_scan(df: DataFrame) -> DataFrame:
-    """Rebalance an under-parallel stream to cluster width before an
-    edge-distinct whose INPUT carries real upstream compute (round 9).
-    Used by triangle_counts only: its pair stream comes from the
-    o-keyed self-join, so parallelizing the partial distinct pays
-    (interleaved A/B: min 3.10 -> 2.82 s). On the plain-scan preambles
-    (pagerank/LPA/kcore) the same rebalance measured 10-18% SLOWER —
-    there the extra exchange buys nothing — and was reverted. Scale-
-    conditional like queries.base.widen: a no-op whenever the stream is
-    already at cluster parallelism (split count derived from scan file
-    sizes — round 10: the former .rdd probe forced physical planning
-    and, under AQE, eagerly executed exchange-bearing inputs' upstream
-    stages; derived/non-file inputs are treated as wide).
-    XORQ_GRAPH_WIDEN_DISTINCT=0 disables (A/B hook)."""
-    if os.environ.get("XORQ_GRAPH_WIDEN_DISTINCT", "1") == "0":
-        return df
-    from xorq_spark.operators.partitioning import widen as _widen
-
-    return _widen(df)
 
 
 def _sanitize_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -361,7 +342,13 @@ def triangle_counts(
     ).where(F.col("u").isNotNull() & F.col("v").isNotNull()).where(
         F.col("u") < F.col("v")
     )
-    e0 = _widen_scan(e0).distinct().localCheckpoint(eager=True)
+    # Rebalance an under-parallel pair stream before the edge-distinct
+    # (round 9): the stream carries real upstream compute, so a wider
+    # partial distinct pays (interleaved A/B: min 3.10 -> 2.82 s). On
+    # the plain-scan preambles (pagerank/LPA/kcore) the same rebalance
+    # measured 10-18% SLOWER and was reverted. A plan no-op whenever
+    # the scan already runs at cluster parallelism.
+    e0 = widen(e0).distinct().localCheckpoint(eager=True)
     # One synchronous barrier for the whole operator: the broadcast
     # gate needs the edge count NOW, and |o| == |e0| by construction
     # (o inner-joins e0 against its own degree table, which contains
@@ -387,16 +374,15 @@ def triangle_counts(
     # struct forms, and the closure intersects the ENCODED keys
     # directly (equal key <=> equal corner node, since deg(z) is a
     # function of z). Gated on the MEASURED bounds from the barrier
-    # above; XORQ_GRAPH_ENC_ORIENT=0 restores the struct path (A/B
-    # hook). Values identical either way — same total order, same
-    # intersection cardinalities, ids decoded with a mask at the end.
+    # above; other ids take the struct path. Values identical either
+    # way — same total order, same intersection cardinalities, ids
+    # decoded with a mask at the end.
     enc = (
         m_edges > 0
         and _b["lo"] is not None
         and _b["lo"] >= 0
         and _b["hi"] < (1 << 31)
         and 2 * m_edges < (1 << 31)
-        and os.environ.get("XORQ_GRAPH_ENC_ORIENT", "1") != "0"
     )
     # Below the broadcast bound the whole closure is map-side over
     # checkpointed frames (the only runtime decision AQE could make is
@@ -429,10 +415,8 @@ def triangle_counts(
         # the static-compiled plan otherwise exchanged the EDGE list by
         # u and again by v just to look up two degrees. Driver-memory
         # class is the kcore note's (<= 2m node rows at the gate).
-        # XORQ_GRAPH_BC_DEG=0 restores the shuffled attach (A/B hook).
-        if m_edges <= int(broadcast_edge_bound) and os.environ.get(
-            "XORQ_GRAPH_BC_DEG", "1"
-        ) != "0":
+        # Above the bound the attach shuffles.
+        if m_edges <= int(broadcast_edge_bound):
             du, dv = F.broadcast(du), F.broadcast(dv)
         lower_first = (F.col("du") < F.col("dv")) | (
             (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))

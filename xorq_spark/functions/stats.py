@@ -413,21 +413,19 @@ def bootstrap_mean_ci(
     of the B resample means (rank ceil(p*B), ties to smaller b).
     `value_col` must be integer-valued (pre-scale money to cents).
 
-    Scale design: there is NO data-sized shuffle at all — the B
-    weights are codegen'd int64 columns (one md5 + two hex convs per
-    row; the modmul stays in int64 because v < 2^31 and b <= B) folded
-    by one wide aggregate (2B+2 buffers); the map side emits one
-    partial row per partition and everything downstream runs on a
-    single row. (Earlier designs measured at sf0.1: B-fold
+    Scale design: there is NO data-sized shuffle at all — each
+    partition folds its rows' B weights (one md5 per row; the modmul
+    stays in int64 because v < 2^31 and b <= B) into one partial row
+    of 2B+2 sums in an Arrow stage, and everything downstream runs on
+    those partial rows. (Earlier designs measured at sf0.1: B-fold
     explode+groupBy 16.8s; per-resample conv() hex parses 23.7s;
-    DECIMAL modmul 33s; this plan ~2s — same statistic class, the
-    uniform stream is the committed contract the oracle replays.)
+    DECIMAL modmul 33s; an all-SQL 2B+2-buffer aggregate ~2s — same
+    statistic class, the uniform stream is the committed contract the
+    oracle replays.)
 
     Returns one row: (n, point_mean_e6, ci_lo_e6, ci_hi_e6,
     n_resamples).
     """
-    from pyspark.sql import Window
-
     B = int(n_resamples)
     P31 = (1 << 31) - 1
     # Rebalance the narrow (x, key) rows to cluster parallelism before
@@ -447,88 +445,25 @@ def bootstrap_mean_ci(
         F.col(key_col).cast("string").alias("__k"),
     ).where(F.col("__x").isNotNull() & F.col("__k").isNotNull())
     d = _widen(d)
-    import os
-
-    if os.environ.get("XORQ_BOOTSTRAP_ARROW", "1") != "0":
-        per_b, wide = _bootstrap_partials_arrow(d, B, P31, seed)
-    else:
-        per_b, wide = _bootstrap_partials_sql(d, B, P31, seed)
+    per_b, wide = _bootstrap_partials_arrow(d, B, P31, seed)
     return _bootstrap_readout(per_b, wide, lo_pct, hi_pct)
 
 
-def _bootstrap_partials_sql(d, B, P31, seed):
-    """All-SQL partial sums: the 2B+2-buffer codegen'd aggregate (the
-    design whose measured alternatives are recorded in the
-    bootstrap_mean_ci docstring). Returns (per_b, wide)."""
-    from pyspark.sql import Window  # noqa: F401 (kept for parity)
-
-    two = d.select(
-        "__x",
-        F.expr(f"md5(concat('{seed}|', __k))").alias("__dig"),
-    ).select(
-        "__x",
-        F.expr(
-            f"CAST(conv(substring(__dig, 1, 8), 16, 10) AS BIGINT) % {P31}"
-        ).alias("__v1"),
-        # greatest(·, 1) remaps the ~2^-31 v2=0 row (whose 40 weights
-        # would otherwise all collapse to the same value) to stride 1;
-        # part of the committed contract the oracle replays
-        F.expr(
-            f"greatest(CAST(conv(substring(__dig, 17, 8), 16, 10) AS BIGINT)"
-            f" % {P31}, 1)"
-        ).alias("__v2"),
-    )
-    # Weight expressions are INLINED into the aggregate so the whole
-    # uniform -> inverse-CDF -> partial-sum chain lives inside the hash
-    # aggregate's codegen'd update loop. (Materializing 40 weight
-    # columns in a projection first defeats whole-stage codegen —
-    # measured 25s vs 3s at sf0.1 for identical results. The weight is
-    # the branchless #{thresholds <= u}, equal to the CASE-chain
-    # inverse-CDF index.)
-    aggs = [F.count(F.lit(1)).cast("long").alias("__n"),
-            F.sum("__x").alias("__sx")]
-    for b in range(1, B + 1):
-        u = f"((__v1 + __v2 * {b}) % {P31} % 1000000)"
-        wexpr = "(" + " + ".join(
-            f"CAST({u} >= {t} AS BIGINT)" for t in _POISSON1_CDF_E6
-        ) + ")"
-        aggs.append(
-            F.expr(f"CAST(sum({wexpr} * __x) AS BIGINT)").alias(f"__swx{b}")
-        )
-        aggs.append(F.expr(f"CAST(sum({wexpr}) AS BIGINT)").alias(f"__sw{b}"))
-    wide = two.agg(*aggs).localCheckpoint(eager=True)
-    per_struct = ",".join(
-        f"struct(CAST({b} AS INT) AS b, __swx{b} AS swx, __sw{b} AS sw)"
-        for b in range(1, B + 1)
-    )
-    per_b = (
-        wide.select(F.explode(F.expr(f"array({per_struct})")).alias("__p"))
-        .select(
-            F.col("__p.b").alias("__b"),
-            F.col("__p.swx").alias("__swx"),
-            F.col("__p.sw").alias("__sw"),
-        )
-        .where(F.col("__sw") > 0)
-    )
-    return per_b, wide
-
-
 def _bootstrap_partials_arrow(d, B, P31, seed):
-    """Arrow-stage twin of _bootstrap_partials_sql (round 10, guide
-    §4.2): the 2B+2-buffer aggregate's VALUE is tiny, but its 82
-    expression trees cost the driver ~1.5 s of analysis/optimization
-    per invocation (data-independent — the VERDICT-named bootstrap
-    floor). Here each task computes the identical integer partial sums
-    in numpy/hashlib — md5(seed|key) hex halves mod 2^31-1, Carter-
+    """Partial sums in one Arrow stage (round 10, guide §4.2). The
+    former all-SQL design, a 2B+2-buffer codegen'd aggregate (now the
+    reference in tests/test_incremental_pit_pmi.py), computes a tiny
+    VALUE, but its 82 expression trees cost the driver ~1.5 s of
+    analysis/optimization per invocation (data-independent — the
+    VERDICT-named bootstrap floor). Here each task computes the
+    identical integer partial sums in numpy/hashlib — md5(seed|key) hex halves mod 2^31-1, Carter-
     Wegman u_b = (v1 + v2*b) mod P31 mod 1e6, weight = #{thresholds
     <= u_b}, all int64 with no rounding anywhere — and emits ONE
     partial row; a 2B-element JVM aggregate folds the partials. Same
     committed contract, same exact integers (pinned by
     test_bootstrap_arrow_matches_sql + the oracle hash); the plan the
-    driver analyzes is ~40 nodes instead of ~10k.
-    XORQ_BOOTSTRAP_ARROW=0 restores the all-SQL aggregate."""
-    import pandas as pd  # noqa: F401 (worker-side)
-
+    driver analyzes is ~40 nodes instead of ~10k. Returns (per_b,
+    wide)."""
     thresholds = _POISSON1_CDF_E6
     prefix = f"{seed}|"
 
@@ -593,7 +528,7 @@ def _bootstrap_partials_arrow(d, B, P31, seed):
     )
     wide = part.agg(
         F.sum("n").cast("long").alias("__n"),
-        # sum(sx) over zero-row partials is 0, but the SQL twin's
+        # sum(sx) over zero-row partials is 0, but the SQL reference's
         # sum(__x) over an empty input is NULL — div by __n = 0 yields
         # NULL either way, so the readout matches on empty inputs too
         F.sum("sx").cast("long").alias("__sx"),

@@ -48,13 +48,10 @@ def _conf_bytes(spark, key: str, default: int) -> int:
         return default
 
 
-def scan_splits(df: DataFrame) -> Optional[int]:
-    """Estimated input-split count of ``df``'s underlying file scan(s),
-    computed from file sizes with Spark's FilePartition math (split
-    large files at maxSplitBytes, charge openCostInBytes per file, pack
-    pieces descending, close a partition at maxSplitBytes). Returns
-    ``None`` when the input is not a locally statable file scan —
-    callers must treat that as "already wide enough"."""
+def _local_file_sizes(df: DataFrame) -> Optional[list]:
+    """On-disk sizes of ``df``'s input files, or ``None`` when the input
+    is not a locally statable file scan (no files, a non-``file:`` URI,
+    or a file that cannot be statted)."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -76,6 +73,19 @@ def scan_splits(df: DataFrame) -> Optional[int]:
             sizes.append(os.path.getsize(path))
         except OSError:
             return None
+    return sizes
+
+
+def scan_splits(df: DataFrame) -> Optional[int]:
+    """Estimated input-split count of ``df``'s underlying file scan(s),
+    computed from file sizes with Spark's FilePartition math (split
+    large files at maxSplitBytes, charge openCostInBytes per file, pack
+    pieces descending, close a partition at maxSplitBytes). Returns
+    ``None`` when the input is not a locally statable file scan —
+    callers must treat that as "already wide enough"."""
+    sizes = _local_file_sizes(df)
+    if sizes is None:
+        return None
     spark = df.sparkSession
     max_pb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 * 1024**2)
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 * 1024**2)
@@ -117,27 +127,8 @@ def scan_bytes(df: DataFrame) -> Optional[int]:
     ``None`` when the input is not a locally statable file scan.
     Used to gate materialization decisions (e.g. pinning a projected
     fact table) on a byte budget instead of engaging unconditionally."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        if f.startswith("file:"):
-            path = f[5:]
-            while path.startswith("//"):
-                path = path[1:]
-        elif "://" in f:
-            return None
-        else:
-            path = f
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
+    sizes = _local_file_sizes(df)
+    return None if sizes is None else sum(sizes)
 
 
 def widen(df: DataFrame, parallelism: Optional[int] = None) -> DataFrame:

@@ -8,6 +8,9 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+# re-exported: the query modules rebalance under-parallel scans with it
+from xorq_spark.operators.partitioning import widen  # noqa: F401
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -76,35 +79,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     per_session[key] = df
     return df
-
-
-def widen(df: DataFrame) -> DataFrame:
-    """Repartition to cluster parallelism before a compute-bound narrow
-    pipeline.
-
-    A small parquet file (or one big row group) scans as ONE input
-    split, serializing per-row compute (hashing, tokenization, UDFs) on
-    a single core no matter how many are free. A round-robin
-    repartition moves the rows once — cheap relative to the compute —
-    and restores full parallelism. Row-preserving, so oracle results
-    are unaffected.
-
-    Scale-conditional (round 9): a repartition is NOT free at scale —
-    it shuffles every projected row — so when the input already scans
-    at cluster parallelism (the normal many-split case at real data
-    sizes) this is a true no-op and the plan is returned unchanged.
-    Only an under-parallel scan (fewer splits than cores) pays the
-    rebalance, which is exactly when it wins.
-
-    Round 10: the split count is derived from the scan's file sizes
-    (operators.partitioning.scan_splits) instead of probing
-    ``df.rdd.getNumPartitions()`` — the RDD probe forced a physical
-    planning pass per call and, under AQE, eagerly executed the
-    upstream stages of any exchange-bearing input. Non-file inputs are
-    treated as already wide (the scale-safe default)."""
-    from xorq_spark.operators.partitioning import widen as _widen
-
-    return _widen(df)
 
 
 def pinned_order(df: DataFrame, *cols) -> DataFrame:

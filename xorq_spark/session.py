@@ -83,14 +83,21 @@ def _workers_import_package() -> bool:
 
 
 def options(master: Optional[str] = None) -> dict:
-    """Session conf applied at connect() time (all safe at 100 TB scale).
-
-    `master` gates the local-only defaults (tmpfs scratch, worker daemon);
-    defaults to XORQ_SPARK_MASTER or local mode, matching connect()."""
+    """Session conf applied at connect() time (all safe at 100 TB scale):
+    the portable analytic conf plus the host-gated entries for `master`
+    (tmpfs scratch, worker daemon). `master` defaults to
+    XORQ_SPARK_MASTER or local mode, matching connect()."""
     if master is None:
         master = os.environ.get(
             "XORQ_SPARK_MASTER", f"local[{_default_parallelism()}]"
         )
+    return {**analytic_options(), **_host_options(master)}
+
+
+def analytic_options() -> dict:
+    """The portable part of options(): what a build's profile.yaml
+    records. Each value is overridden through the Spark conf itself
+    (connect(extra_conf=...) or SessionConfig), applied after these."""
     par = _default_parallelism()
     shuffle = os.environ.get("XORQ_SPARK_SHUFFLE_PARTITIONS", str(max(par, 32)))
     return {
@@ -114,10 +121,8 @@ def options(master: Optional[str] = None) -> dict:
         # hdr 3.11->2.85, mmr 2.31->2.09, nb_classifier 1.82->1.64,
         # bitext 2.60->2.42; scheduling-bound iterative operators pin
         # their own width (pagerank/LPA/kcore measured-fit) and are
-        # unaffected.
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": (
-            os.environ.get("XORQ_SPARK_AQE_MIN_PARTITION", "262144")
-        ),
+        # unaffected. Override the conf through extra_conf/SessionConfig.
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "262144",
         "spark.sql.shuffle.partitions": shuffle,
         # Arrow everywhere Python touches data (pandas UDFs, toPandas).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -143,29 +148,11 @@ def options(master: Optional[str] = None) -> dict:
         # The AQE threshold additionally converts a sort-merge join to
         # shuffled-hash at runtime only when EVERY post-shuffle
         # partition is under 64 MiB — a per-partition bound that stays
-        # safe at any corpus size. Set XORQ_SPARK_PREFER_SMJ=true to
-        # restore the default on clusters where executor memory per
-        # task is tight.
-        "spark.sql.join.preferSortMergeJoin": os.environ.get(
-            "XORQ_SPARK_PREFER_SMJ", "false"
-        ),
+        # safe at any corpus size. On clusters where executor memory
+        # per task is tight, set this conf to "true" through
+        # extra_conf/SessionConfig.
+        "spark.sql.join.preferSortMergeJoin": "false",
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64MB",
-        # Shuffle + block-store scratch on the fastest local storage
-        # available (guide §2.1: local disk bandwidth for shuffle files
-        # can be the tighter limit). On clusters this is the NVMe/SSD
-        # mount ops point spark.local.dir at; in this container /tmp is
-        # a disk-backed fs while /dev/shm is tmpfs — alternating-session
-        # A/B (base vs tmpfs, 2 sessions each): line_dedup 1.42->0.89s,
-        # minhash pairs 0.98->0.81s, hdr 2.26->1.92s, triangle
-        # 3.16->2.82s, LPA 2.51->2.26s. Overridable (or disabled) via
-        # XORQ_SPARK_LOCAL_DIR; falls back to the Spark default when
-        # /dev/shm is absent. Shuffle volumes here are MBs; a cluster
-        # deployment sizes its scratch mount to the workload as usual.
-        **(
-            {"spark.local.dir": _fast_local_dir(master)}
-            if _fast_local_dir(master)
-            else {}
-        ),
         # Sort-based shuffle writer for every shuffle wider than 8
         # partitions: the bypass writer (default threshold 200) opens
         # one file PER REDUCE PARTITION per map task — jstack sampling
@@ -176,10 +163,9 @@ def options(master: Optional[str] = None) -> dict:
         # line_dedup 0.91->0.67s, triangle -9%, minhash pairs -11%,
         # hdr/LPA flat. At scale M*R tiny files is exactly the shuffle
         # pathology guide §2.2 warns about — fewer, larger files is the
-        # right default at any size.
-        "spark.shuffle.sort.bypassMergeThreshold": os.environ.get(
-            "XORQ_SPARK_BYPASS_MERGE_THRESHOLD", "8"
-        ),
+        # right default at any size. Override the conf through
+        # extra_conf/SessionConfig.
+        "spark.shuffle.sort.bypassMergeThreshold": "8",
         # Bound the SQL UI status store's driver-heap footprint (guide
         # §5: the driver should do almost no data work — and no
         # unbounded bookkeeping either). Each tracked execution stores
@@ -191,12 +177,9 @@ def options(master: Optional[str] = None) -> dict:
         # hundreds of queries (the oracle sweep; any production driver
         # loop) OOM'd a default-sized driver exactly there. 4 MiB per
         # plan is still far beyond what explain() artifacts need.
-        "spark.sql.maxPlanStringLength": os.environ.get(
-            "XORQ_SPARK_MAX_PLAN_STRING", "4194304"
-        ),
-        "spark.sql.ui.retainedExecutions": os.environ.get(
-            "XORQ_SPARK_UI_RETAINED_EXECUTIONS", "100"
-        ),
+        # Override either conf through extra_conf/SessionConfig.
+        "spark.sql.maxPlanStringLength": "4194304",
+        "spark.sql.ui.retainedExecutions": "100",
         # Generated-class cache: the default 100 entries thrashes on
         # multi-round iterative plans (MMR's 4 unrolled rounds alone
         # mint ~150 classes), forcing a full Janino recompile of every
@@ -204,6 +187,28 @@ def options(master: Optional[str] = None) -> dict:
         # 16 s -> 1.7 s warm on the permutation test by raising it.
         # Cost is bounded driver memory (~KBs per cached class).
         "spark.sql.codegen.cache.maxEntries": "5000",
+    }
+
+
+def _host_options(master: str) -> dict:
+    """The host-gated part of options(), recomputed for each connect()'s
+    master and never recorded in a build profile: a value right for
+    this host (a tmpfs path, an importable worker module) can be wrong
+    on the cluster a build later runs on."""
+    local_dir = _fast_local_dir(master)
+    return {
+        # Shuffle + block-store scratch on the fastest local storage
+        # available (guide §2.1: local disk bandwidth for shuffle files
+        # can be the tighter limit). On clusters this is the NVMe/SSD
+        # mount ops point spark.local.dir at; on the measurement host
+        # /tmp was a disk-backed fs and /dev/shm tmpfs — alternating-
+        # session A/B (base vs tmpfs, 2 sessions each): line_dedup
+        # 1.42->0.89s, minhash pairs 0.98->0.81s, hdr 2.26->1.92s, triangle
+        # 3.16->2.82s, LPA 2.51->2.26s. Overridable (or disabled) via
+        # XORQ_SPARK_LOCAL_DIR; falls back to the Spark default when
+        # /dev/shm is absent. Shuffle volumes here are MBs; a cluster
+        # deployment sizes its scratch mount to the workload as usual.
+        **({"spark.local.dir": local_dir} if local_dir else {}),
         # Python worker daemon (module docstring). Only for local /
         # local[N] masters (local-cluster executors run in their own
         # work dirs) whose workers can import the package: a daemon
@@ -231,15 +236,11 @@ def static_compile(spark):
     freezes the statically-compiled RDD chain, so the later action
     executes it as ONE job chain. Scope sections ONLY where every
     frame is bounded or already partition-fitted; leave scans and
-    data-sized joins under AQE (skew split / coalesce). Override with
-    XORQ_SPARK_GRAPH_ROUNDS_AQE=true (restores adaptive everywhere
-    this scope is used)."""
+    data-sized joins under AQE (skew split / coalesce)."""
     key = "spark.sql.adaptive.enabled"
     old = spark.conf.get(key)
     try:
-        spark.conf.set(
-            key, os.environ.get("XORQ_SPARK_GRAPH_ROUNDS_AQE", "false")
-        )
+        spark.conf.set(key, "false")
         yield
     finally:
         spark.conf.set(key, old)
