@@ -176,6 +176,24 @@ def test_fill_drop_null(spark):
     assert mt.drop_null(["b"]).count(spark) == 2
 
 
+def test_memtable_binds_from_arrow_exactly(spark):
+    # past 2**53 a float64 hop rounds: 2**62 + 1 came back as 2**62
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    tbl = pa.table(
+        {
+            "a": pa.array([2**62 + 1, None], pa.int64()),
+            "d": pa.array([Decimal("12345678.91"), None], pa.decimal128(10, 2)),
+        }
+    )
+    got = xo.memtable(tbl).to_pyarrow(spark)
+    assert got.column("a").to_pylist() == [2**62 + 1, None]
+    assert got.column("d").to_pylist() == [Decimal("12345678.91"), None]
+    assert got.schema.field("d").type == pa.decimal128(10, 2)
+
+
 def test_unnest(spark):
     mt = xo.memtable({"k": [1, 2], "xs": [[1, 2, 3], [4]]})
     got = mt.unnest("xs").order_by("k", "xs").execute(spark)

@@ -5,6 +5,7 @@ Python reference replay for PMI lift."""
 import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def _ts(s):
@@ -767,19 +768,128 @@ def _bootstrap_partials_sql(d, B, P31, seed):
     return per_b, wide
 
 
-def test_bootstrap_arrow_matches_sql(spark):
-    """Round 10: the Arrow-stage partial sums must reproduce the SQL
-    reference aggregate's exact integers (same md5/Carter-Wegman/
-    inverse-CDF contract) on every output column."""
-    from xorq_spark.functions.stats import _bootstrap_readout, bootstrap_mean_ci
+def _bootstrap_readout(per_b, wide, lo_pct, hi_pct):
+    """Shared CI readout over the (b, swx, sw) rows + (n, sx) totals."""
+    from pyspark.sql import Window
 
-    rows = [(i * 37 % 501 - 250, f"k{i}") for i in range(777)]
-    df = spark.createDataFrame(rows, "x long, k string")
-    arrow = bootstrap_mean_ci(df, "x", "k", n_resamples=40).collect()
-    d = df.select(
-        F.col("x").alias("__x"), F.col("k").alias("__k")
+    means = per_b.select(
+        "__b",
+        F.expr(
+            "CAST(CAST(__swx AS DECIMAL(38,0)) * 1000000"
+            " div CAST(__sw AS DECIMAL(38,0)) AS BIGINT)"
+        ).alias("__m"),
     )
-    per_b, wide = _bootstrap_partials_sql(d, 40, (1 << 31) - 1, "bs")
-    sql = _bootstrap_readout(per_b, wide, 5, 95).collect()
-    assert [tuple(r) for r in arrow] == [tuple(r) for r in sql]
-    assert arrow[0]["n"] == 777
+    w = Window.orderBy("__m", "__b")
+    ranked = means.withColumn("__r", F.row_number().over(w))
+    bq = means.agg(
+        F.count(F.lit(1)).cast("long").alias("__nB")
+    ).select(
+        "__nB",
+        F.expr(f"({int(lo_pct)} * __nB + 99) div 100").alias("__lo_r"),
+        F.expr(f"({int(hi_pct)} * __nB + 99) div 100").alias("__hi_r"),
+    )
+    stats = wide.select(
+        F.col("__n").alias("n"),
+        F.expr(
+            "CAST(CAST(__sx AS DECIMAL(38,0)) * 1000000"
+            " div __n AS BIGINT)"
+        ).alias("point_mean_e6"),
+    )
+    picks = ranked.crossJoin(F.broadcast(bq))
+    lo = picks.where(F.col("__r") == F.col("__lo_r")).select(
+        F.col("__m").alias("ci_lo_e6")
+    )
+    hi = picks.where(F.col("__r") == F.col("__hi_r")).select(
+        F.col("__m").alias("ci_hi_e6"),
+        F.col("__nB").alias("n_resamples"),
+    )
+    return stats.crossJoin(F.broadcast(lo)).crossJoin(F.broadcast(hi))
+
+
+def _bootstrap_rows(name):
+    if name == "mixed777":
+        return [(i * 37 % 501 - 250, f"k{i}") for i in range(777)]
+    if name == "one_row":
+        return [(-7, "k0")]
+    if name == "empty":
+        return []
+    # non-ASCII keys: Spark's md5 must hash the same UTF-8 bytes the
+    # oracle does
+    keys = ["ключ", "日本語", "é", "naïve", "🙂", "Straße", "ǅ", " "]
+    return [(i * 13 % 97 - 40, f"{keys[i % len(keys)]}{i}") for i in range(200)]
+
+
+@pytest.mark.parametrize(
+    "name,B,lo_pct,hi_pct",
+    [
+        ("mixed777", 40, 5, 95),
+        ("one_row", 40, 5, 95),
+        ("empty", 40, 5, 95),
+        ("non_ascii", 40, 5, 95),
+        ("mixed777", 1, 5, 95),
+        ("mixed777", 100, 5, 95),
+        ("mixed777", 40, 50, 50),
+        ("mixed777", 40, 0, 95),
+        ("mixed777", 40, 5, 100),
+    ],
+)
+def test_bootstrap_arrow_matches_sql(spark, name, B, lo_pct, hi_pct):
+    """The JVM digest, Arrow partials and one-task fold must reproduce
+    the SQL reference aggregate + readout exactly (same md5/Carter-
+    Wegman/inverse-CDF contract) on every output column, zero-row
+    readouts included."""
+    from xorq_spark.functions.stats import bootstrap_mean_ci
+
+    rows = _bootstrap_rows(name)
+    df = spark.createDataFrame(rows, "x long, k string")
+    if name == "non_ascii":
+        import hashlib
+
+        dig = df.select("k", F.md5(F.concat(F.lit("bs|"), "k")).alias("d"))
+        assert {r.k: r.d for r in dig.collect()} == {
+            k: hashlib.md5(f"bs|{k}".encode("utf-8")).hexdigest()
+            for _, k in rows
+        }
+    got = bootstrap_mean_ci(
+        df, "x", "k", n_resamples=B, lo_pct=lo_pct, hi_pct=hi_pct
+    ).collect()
+    d = df.select(F.col("x").alias("__x"), F.col("k").alias("__k"))
+    per_b, wide = _bootstrap_partials_sql(d, B, (1 << 31) - 1, "bs")
+    want = _bootstrap_readout(per_b, wide, lo_pct, hi_pct).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    # rank 0 (lo_pct = 0) and an empty input read out zero rows
+    assert len(got) == (0 if name == "empty" or lo_pct == 0 else 1)
+    assert all(r["n"] == len(rows) for r in got)
+
+
+def test_bootstrap_builds_lazily_and_runs_three_jobs(spark, tmp_path):
+    """Building the CI launches no job; the action runs at most three:
+    the widen rebalance of the one-file scan, the Arrow partials, and
+    the fold task."""
+    import uuid
+
+    from xorq_spark.functions.stats import bootstrap_mean_ci
+
+    path = str(tmp_path / "bs.parquet")
+    spark.createDataFrame(
+        [(i % 100, str(i)) for i in range(2000)], "x long, k string"
+    ).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        group = f"bootstrap-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "bootstrap job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    ci, built = jobs(lambda: bootstrap_mean_ci(df, "x", "k"))
+    rows, ran = jobs(ci.collect)
+    assert built == []
+    assert 1 <= len(ran) <= 3
+    assert rows[0]["n"] == 2000 and rows[0]["point_mean_e6"] == 49_500_000

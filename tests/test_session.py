@@ -154,3 +154,18 @@ def test_user_conf_overrides_daemon(how, monkeypatch):
     else:
         built = session.connect(master="local[4]", session_config=session.SessionConfig(user))
     assert built.conf[DAEMON] == "pyspark.daemon"
+
+
+DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def test_call_site_capture_off_by_default(spark):
+    assert spark.conf.get(DEBUGGING) == "false"
+
+
+def test_user_conf_turns_call_site_capture_back_on(monkeypatch):
+    monkeypatch.chdir(ROOT)
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=_Builder()))
+    monkeypatch.setattr(session, "_active", None)
+    built = session.connect(master="local[4]", extra_conf={DEBUGGING: "true"})
+    assert built.conf[DEBUGGING] == "true"

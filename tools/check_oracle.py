@@ -150,7 +150,14 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    # Check the tree this script lives in, whatever the working
+    # directory; PYTHONPATH lets Spark's Python workers (and the worker
+    # daemon gate in session.connect) import that same tree.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as entry_mod
     from xorq_spark.session import connect
 

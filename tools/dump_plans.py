@@ -42,6 +42,9 @@ def main():
         )
         # Strip the volatile parts (full paths, object ids) for a stable diff.
         plan = re.sub(r"file:[^\],\s]*", "file:...", plan)
+        # ... and the session-wide Exchange counter, so two dumps of one
+        # commit are byte-identical
+        plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
         # Unrolled iterative queries (MMR, pagerank-style loops) produce
         # plans in the tens of thousands of lines; cap each at 400 lines
         # — the operator tree summary at the top is what reviewers read.

@@ -193,7 +193,11 @@ def lower(
             return read_delta_fallback(spark, node.path, node.version)
     if isinstance(node, N.Memtable):
         tbl = get_memtable(node.token)
-        return spark.createDataFrame(tbl.to_pandas(), schema=schema_to_struct(node.schema))
+        # bind from Arrow, not pandas: to_pandas() turns a nullable int64
+        # into float64 and rounds values past 2**53. Columns bind by
+        # position (rows given as tuples arrive named "0", "1", ...)
+        struct = schema_to_struct(node.schema)
+        return spark.createDataFrame(tbl.rename_columns(struct.names), schema=struct)
     if isinstance(node, N.TableRef):
         return spark.table(node.name)
     if isinstance(node, N.UnboundTable):

@@ -413,24 +413,32 @@ def bootstrap_mean_ci(
     of the B resample means (rank ceil(p*B), ties to smaller b).
     `value_col` must be integer-valued (pre-scale money to cents).
 
-    Scale design: there is NO data-sized shuffle at all — each
-    partition folds its rows' B weights (one md5 per row; the modmul
-    stays in int64 because v < 2^31 and b <= B) into one partial row
-    of 2B+2 sums in an Arrow stage, and everything downstream runs on
-    those partial rows. (Earlier designs measured at sf0.1: B-fold
-    explode+groupBy 16.8s; per-resample conv() hex parses 23.7s;
-    DECIMAL modmul 33s; an all-SQL 2B+2-buffer aggregate ~2s — same
-    statistic class, the uniform stream is the committed contract the
-    oracle replays.)
+    Scale design: there is NO data-sized shuffle at all. One lazy
+    chain: Catalyst computes each row's md5 digest halves (v1, v2);
+    an Arrow stage folds every partition's rows into one partial row
+    of 2B+2 integer sums; those partial rows (one per input
+    partition, so the exchange is sized by the partition count, not
+    the data) move to ONE Python task that sums them exactly, ranks
+    the resample means and emits the CI row. Building the frame
+    launches no job; its action runs at most 3 (the `widen`
+    rebalance, the partials stage, the fold task) where the former
+    checkpoint-pinned partials + SQL readout (posexplode/groupBy,
+    window rank, broadcast cross joins) ran 12. (Earlier designs
+    measured at sf0.1: B-fold explode+groupBy 16.8s; per-resample
+    conv() hex parses 23.7s; DECIMAL modmul 33s; an all-SQL
+    2B+2-buffer aggregate ~2s — same statistic class, the uniform
+    stream is the committed contract the oracle replays.)
 
     Returns one row: (n, point_mean_e6, ci_lo_e6, ci_hi_e6,
-    n_resamples).
+    n_resamples) — or zero rows when no resample has weight (an empty
+    input) or a percentile rank falls outside 1..n_resamples
+    (lo_pct = 0).
     """
     B = int(n_resamples)
     P31 = (1 << 31) - 1
     # Rebalance the narrow (x, key) rows to cluster parallelism before
-    # the digest+inverse-CDF aggregate: the per-row work (one md5 plus
-    # 2B threshold folds) is heavy enough that a single-split scan
+    # the digest+inverse-CDF stage: the per-row work (one md5 plus 2B
+    # threshold folds) is heavy enough that a single-split scan
     # serializes it (measured 5.5 CPU-s on 3 input splits at sf0.1;
     # interleaved A/B 3.01 -> 2.09 s). Weights are a pure function of
     # (seed, b, key) and the folds are commutative sums, so row
@@ -445,31 +453,44 @@ def bootstrap_mean_ci(
         F.col(key_col).cast("string").alias("__k"),
     ).where(F.col("__x").isNotNull() & F.col("__k").isNotNull())
     d = _widen(d)
-    per_b, wide = _bootstrap_partials_arrow(d, B, P31, seed)
-    return _bootstrap_readout(per_b, wide, lo_pct, hi_pct)
+    part = _bootstrap_partials_arrow(d, B, P31, seed)
+    return part.repartition(1).mapInPandas(
+        _bootstrap_fold(B, int(lo_pct), int(hi_pct)),
+        "n long, point_mean_e6 long, ci_lo_e6 long, ci_hi_e6 long,"
+        " n_resamples long",
+    )
 
 
 def _bootstrap_partials_arrow(d, B, P31, seed):
-    """Partial sums in one Arrow stage (round 10, guide §4.2). The
-    former all-SQL design, a 2B+2-buffer codegen'd aggregate (now the
-    reference in tests/test_incremental_pit_pmi.py), computes a tiny
-    VALUE, but its 82 expression trees cost the driver ~1.5 s of
-    analysis/optimization per invocation (data-independent — the
-    VERDICT-named bootstrap floor). Here each task computes the
-    identical integer partial sums in numpy/hashlib — md5(seed|key) hex halves mod 2^31-1, Carter-
-    Wegman u_b = (v1 + v2*b) mod P31 mod 1e6, weight = #{thresholds
-    <= u_b}, all int64 with no rounding anywhere — and emits ONE
-    partial row; a 2B-element JVM aggregate folds the partials. Same
-    committed contract, same exact integers (pinned by
-    test_bootstrap_arrow_matches_sql + the oracle hash); the plan the
-    driver analyzes is ~40 nodes instead of ~10k. Returns (per_b,
-    wide)."""
+    """Partial sums: the digest in Catalyst, the folds in one Arrow
+    stage. The JVM projects __x and the two md5 digest halves
+    (Spark's md5 hashes the key's UTF-8 bytes; v2 = 0 is remapped to
+    stride 1 — both part of the committed contract the oracle
+    replays), so each task receives three int64 columns and, with no
+    per-row Python loop, computes Carter-Wegman u_b = (v1 + v2*b) mod
+    P31 mod 1e6 and weight = #{thresholds <= u_b} in numpy — all
+    int64, no rounding anywhere — and emits ONE partial row
+    (n, sx, swx[B], sw[B]). The former all-SQL 2B+2-buffer aggregate
+    (the reference in tests/test_incremental_pit_pmi.py) computes the
+    same integers, but its 82 expression trees cost the driver ~1.5 s
+    of analysis/optimization per invocation; this plan is a few
+    dozen nodes. Exactness is pinned by test_bootstrap_arrow_matches_sql
+    and the oracle hash."""
     thresholds = _POISSON1_CDF_E6
-    prefix = f"{seed}|"
+    dig = d.select(
+        "__x", F.md5(F.concat(F.lit(f"{seed}|"), "__k")).alias("__dig")
+    )
+    v = dig.select(
+        "__x",
+        (F.conv(F.substring("__dig", 1, 8), 16, 10).cast("long") % P31)
+        .alias("__v1"),
+        F.greatest(
+            F.conv(F.substring("__dig", 17, 8), 16, 10).cast("long") % P31,
+            F.lit(1),
+        ).alias("__v2"),
+    )
 
     def partials(it):
-        import hashlib
-
         import numpy as np
         import pandas as pd
 
@@ -479,26 +500,18 @@ def _bootstrap_partials_arrow(d, B, P31, seed):
         swx = np.zeros(B, dtype=np.int64)
         sw = np.zeros(B, dtype=np.int64)
         bs = np.arange(1, B + 1, dtype=np.int64)[:, None]
-        md5 = hashlib.md5
         for pdf in it:
-            m = len(pdf)
-            if m == 0:
+            if len(pdf) == 0:
                 continue
             xs = pdf["__x"].to_numpy(dtype=np.int64)
-            v1 = np.empty(m, dtype=np.int64)
-            v2 = np.empty(m, dtype=np.int64)
-            for i, k in enumerate(pdf["__k"].tolist()):
-                h = md5((prefix + k).encode("utf-8")).hexdigest()
-                v1[i] = int(h[:8], 16) % P31
-                t = int(h[16:24], 16) % P31
-                v2[i] = t if t > 0 else 1
+            v1 = pdf["__v1"].to_numpy(dtype=np.int64)
+            v2 = pdf["__v2"].to_numpy(dtype=np.int64)
             u = (v1[None, :] + v2[None, :] * bs) % P31 % 1000000  # (B, m)
-            w = (u[:, :, None] >= TH[None, None, :]).sum(
-                axis=2, dtype=np.int64
-            )  # (B, m)
+            # #{thresholds <= u}: the insertion point right of u
+            w = np.searchsorted(TH, u, side="right").astype(np.int64)
             swx += (w * xs[None, :]).sum(axis=1)
             sw += w.sum(axis=1)
-            n += m
+            n += len(pdf)
             sx += int(xs.sum())
         yield pd.DataFrame(
             {
@@ -509,69 +522,56 @@ def _bootstrap_partials_arrow(d, B, P31, seed):
             }
         )
 
-    part = d.mapInPandas(
+    return v.mapInPandas(
         partials, "n long, sx long, swx array<long>, sw array<long>"
-    ).localCheckpoint(eager=True)
-    per_b = (
-        part.select(
-            F.posexplode(F.arrays_zip("swx", "sw")).alias("__i", "__z")
-        )
-        .groupBy("__i")
-        .agg(
-            F.sum("__z.swx").cast("long").alias("__swx"),
-            F.sum("__z.sw").cast("long").alias("__sw"),
-        )
-        .select(
-            (F.col("__i") + 1).cast("int").alias("__b"), "__swx", "__sw"
-        )
-        .where(F.col("__sw") > 0)
     )
-    wide = part.agg(
-        F.sum("n").cast("long").alias("__n"),
-        # sum(sx) over zero-row partials is 0, but the SQL reference's
-        # sum(__x) over an empty input is NULL — div by __n = 0 yields
-        # NULL either way, so the readout matches on empty inputs too
-        F.sum("sx").cast("long").alias("__sx"),
-    )
-    return per_b, wide
 
 
-def _bootstrap_readout(per_b, wide, lo_pct, hi_pct):
-    """Shared CI readout over the (b, swx, sw) rows + (n, sx) totals."""
-    from pyspark.sql import Window
+def _bootstrap_fold(B, lo_pct, hi_pct):
+    """The mapInPandas function that reads the CI out of the partial
+    rows in exact Python ints, with Spark's semantics: DECIMAL `div`
+    truncates toward zero (not Python's floor `//`) and a pick rank is
+    (p*nB + 99) div 100 over the sorted means of the nB resamples with
+    weight (ties to smaller b cannot change a picked value). Emits zero
+    rows when no resample has weight or a rank falls outside 1..nB —
+    what a join against an empty pick yields."""
 
-    means = per_b.select(
-        "__b",
-        F.expr(
-            "CAST(CAST(__swx AS DECIMAL(38,0)) * 1000000"
-            " div CAST(__sw AS DECIMAL(38,0)) AS BIGINT)"
-        ).alias("__m"),
-    )
-    w = Window.orderBy("__m", "__b")
-    ranked = means.withColumn("__r", F.row_number().over(w))
-    bq = means.agg(
-        F.count(F.lit(1)).cast("long").alias("__nB")
-    ).select(
-        "__nB",
-        F.expr(f"({int(lo_pct)} * __nB + 99) div 100").alias("__lo_r"),
-        F.expr(f"({int(hi_pct)} * __nB + 99) div 100").alias("__hi_r"),
-    )
-    stats = wide.select(
-        F.col("__n").alias("n"),
-        F.expr(
-            "CAST(CAST(__sx AS DECIMAL(38,0)) * 1000000"
-            " div __n AS BIGINT)"
-        ).alias("point_mean_e6"),
-    )
-    picks = ranked.crossJoin(F.broadcast(bq))
-    lo = picks.where(F.col("__r") == F.col("__lo_r")).select(
-        F.col("__m").alias("ci_lo_e6")
-    )
-    hi = picks.where(F.col("__r") == F.col("__hi_r")).select(
-        F.col("__m").alias("ci_hi_e6"),
-        F.col("__nB").alias("n_resamples"),
-    )
-    return stats.crossJoin(F.broadcast(lo)).crossJoin(F.broadcast(hi))
+    def fold(it):
+        import pandas as pd
+
+        def div(a, b):
+            q = abs(a) // abs(b)
+            return q if (a < 0) == (b < 0) else -q
+
+        n = sx = 0
+        swx = [0] * B
+        sw = [0] * B
+        for pdf in it:
+            for p in pdf.itertuples(index=False):
+                n += int(p.n)
+                sx += int(p.sx)
+                for b in range(B):
+                    swx[b] += int(p.swx[b])
+                    sw[b] += int(p.sw[b])
+        means = sorted(
+            div(swx[b] * 1000000, sw[b]) for b in range(B) if sw[b] > 0
+        )
+        nB = len(means)
+        lo_r = div(lo_pct * nB + 99, 100)
+        hi_r = div(hi_pct * nB + 99, 100)
+        if not (1 <= lo_r <= nB and 1 <= hi_r <= nB):
+            return
+        yield pd.DataFrame(
+            {
+                "n": [n],
+                "point_mean_e6": [div(sx * 1000000, n)],
+                "ci_lo_e6": [means[lo_r - 1]],
+                "ci_hi_e6": [means[hi_r - 1]],
+                "n_resamples": [nB],
+            }
+        )
+
+    return fold
 
 
 def mann_whitney_u(

@@ -1252,10 +1252,13 @@ def agg_bootstrap_ci(spark, sf_dir):
     pairwise-independent uniform expansion mod 2^31-1, driven through
     the fixed Poisson(1) inverse-CDF table — the bootstrap an external
     engine can REPLAY. Resample means and the exact type-1 CI bounds
-    are integer rationals. NO data-sized shuffle anywhere: the B
-    weights fold through one wide codegen'd aggregate; everything
-    downstream runs on 40 rows. The oracle recomputes every weight,
-    every resample mean, and both bounds."""
+    are integer rationals. NO data-sized shuffle anywhere: Catalyst
+    computes each row's md5 digest halves, an Arrow stage folds every
+    partition into one partial row of 2B+2 sums, and one Python task
+    sums the partial rows and reads out the CI — 3 Spark jobs where
+    the former checkpoint-pinned partials + SQL readout ran 12. The
+    oracle recomputes every weight, every resample mean, and both
+    bounds."""
     from xorq_spark.functions.stats import bootstrap_mean_ci
 
     li = t(spark, sf_dir, "lineitem").select(
