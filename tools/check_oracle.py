@@ -15,6 +15,10 @@ string, any timestamp unit == timestamp) so only representation-
 changing divergence (int vs decimal/float, string vs binary) fails.
 
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
+
+Named queries restrict the check to those queries (the summary counts
+only them); a name that is not registered exits 2 before any query
+runs.
 """
 
 from __future__ import annotations
@@ -161,6 +165,16 @@ def main():
     import __spark_entry__ as entry_mod
     from xorq_spark.session import connect
 
+    # Check exactly the named queries (all when none are named); a name
+    # that is not registered is an error, not a query that passes.
+    queries = entry_mod.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"not registered: {' '.join(unknown)}")
+        sys.exit(2)
+    if only:
+        queries = {n: fn for n, fn in queries.items() if n in only}
+
     # The full sweep runs 370+ queries through ONE local-mode session:
     # Spark's 1g default driver heap (which in local mode is the whole
     # JVM, executors included) OOM'd the appStatus listener mid-sweep
@@ -182,12 +196,9 @@ def main():
             f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"
         )
 
-    queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in queries.items():
-        if only and name not in only:
-            continue
         try:
             sdf = fn(spark, sf_dir)
             sfields = [(f.name, f.dataType.simpleString()) for f in sdf.schema.fields]

@@ -1,6 +1,9 @@
 """Dump formatted physical plans for the headline queries into PLANS.md.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage: python tools/dump_plans.py [sf_dir] [out]
+
+``out`` defaults to this tree's ``PLANS.md``; pass another path to
+compare two trees' plans without overwriting the committed file.
 
 The point is reviewability: PushedFilters / ReadSchema on every scan
 (pushdown + pruning reached the parquet reader), BroadcastHashJoin on
@@ -13,11 +16,13 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "PLANS.md")
 
     from xorq_spark.session import connect
     from xorq_spark.queries import QUERIES
@@ -57,9 +62,9 @@ def main():
         plan = "\n".join(lines)
         out.append(f"## {name}\n\n```\n{plan}\n```\n")
 
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(out_path, "w") as f:
         f.write("\n".join(out))
-    print(f"PLANS.md written ({len(HEADLINE)} queries)")
+    print(f"{out_path} written ({len(HEADLINE)} queries)")
 
 
 if __name__ == "__main__":

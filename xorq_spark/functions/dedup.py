@@ -22,6 +22,8 @@ from typing import Optional, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from xorq_spark.operators.partitioning import fitted_shuffle
+
 
 def let(value: Column, body) -> Column:
     """Let-binding for Spark SQL lambdas: evaluate `value` once and bind
@@ -723,18 +725,7 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    # Size the per-round shuffles to the MEASURED edge count (known free
-    # from the convergence signature): a near-dup graph is typically
-    # orders of magnitude smaller than the corpus, and each star round
-    # is ~6 shuffle stages — at the session's fact-table partition count
-    # those stages are mostly empty-task scheduling overhead (AQE's
-    # coalescing does not reach across the checkpoint boundary). ~500k
-    # edges per partition, clamped to the session default, restored on
-    # exit. Conf mutation is driver-side and scoped to this loop's
-    # eager actions.
     spark = edges.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
 
     def edge_sig(df):
         return tuple(
@@ -744,31 +735,30 @@ def connected_components(
             ).first()
         )
 
-    try:
-        # Signature of the INPUT edge set: sizes round 0's shuffles and
-        # lets an already-star-shaped input exit after one confirming
-        # round (fixpoint test: star(e) == e, sig-compared).
-        e = e.localCheckpoint(eager=True)
-        prev_sig = edge_sig(e)
-        # Measured-size fast path (the same adaptivity as an AQE
-        # broadcast decision): a near-dup pair graph is typically
-        # orders of magnitude smaller than the corpus, and each star
-        # round costs ~6 scheduled stages. Under the bound (~16 bytes/
-        # edge driver memory; 2M edges ~= 32 MB) a single bounded
-        # collect + union-find replaces O(log^2 n) distributed rounds.
-        # Above it, the star algorithm proceeds untouched.
-        if prev_sig[0] <= small_graph_threshold:
-            return _cc_driver_side(spark, e)
-        for _ in range(max_iterations):
-            fit = max(1, min(int(old_parts), prev_sig[0] // 500_000 + 1))
-            spark.conf.set(conf_key, str(fit))
+    # Signature of the INPUT edge set: sizes round 0's shuffles and
+    # lets an already-star-shaped input exit after one confirming
+    # round (fixpoint test: star(e) == e, sig-compared).
+    e = e.localCheckpoint(eager=True)
+    prev_sig = edge_sig(e)
+    # Measured-size fast path (the same adaptivity as an AQE
+    # broadcast decision): a near-dup pair graph is typically
+    # orders of magnitude smaller than the corpus, and each star
+    # round costs ~6 scheduled stages. Under the bound (~16 bytes/
+    # edge driver memory; 2M edges ~= 32 MB) a single bounded
+    # collect + union-find replaces O(log^2 n) distributed rounds.
+    # Above it, the star algorithm proceeds untouched.
+    if prev_sig[0] <= small_graph_threshold:
+        return _cc_driver_side(spark, e)
+    for _ in range(max_iterations):
+        # Each star round is ~6 shuffle stages, sized from the last
+        # signature's edge count at ~500k edges per partition; the
+        # round's eager checkpoint and its signature run in the scope.
+        with fitted_shuffle(spark, prev_sig[0], 500_000):
             e = _small_star(_large_star(e)).localCheckpoint(eager=True)
             sig = edge_sig(e)
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-    finally:
-        spark.conf.set(conf_key, old_parts)
+        if sig == prev_sig:
+            break
+        prev_sig = sig
     # Fixpoint is a forest of depth-1 stars (child -> min root).
     return (
         e.select(F.col("u").alias("node"), F.col("v").alias("component"))

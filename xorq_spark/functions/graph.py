@@ -23,11 +23,12 @@ driver collect.
 from __future__ import annotations
 
 import os
+from contextlib import nullcontext
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from xorq_spark.operators.partitioning import widen
+from xorq_spark.operators.partitioning import fitted_shuffle, widen
 
 DEFAULT_SCALE = 10**12
 
@@ -41,10 +42,10 @@ from xorq_spark.session import static_compile as _static_rounds
 
 
 def _sanitize_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Shared edge-list preamble (same as pagerank/bfs_hops/hits):
+    """Directed edge-list preamble (pagerank, hits, directed bfs_hops):
     cast endpoints to long, drop null and self-loop edges, distinct —
-    a self-loop or null edge would otherwise inflate degrees, wedges,
-    and walk adjacency."""
+    a self-loop or null edge would otherwise inflate degrees and
+    scores. Returns (src, dst)."""
     return (
         edges.select(
             F.col(src).cast("long").alias("src"),
@@ -52,6 +53,24 @@ def _sanitize_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
         )
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Undirected edge-list preamble: each edge once as (a, b) with
+    a = least, b = greatest of its long-cast endpoints; null and
+    self-loop edges dropped, distinct. least/greatest skip a NULL, so
+    an edge with one NULL endpoint becomes (x, x) and fails a < b like
+    a self-loop; one with two leaves a NULL. The mirrored halves
+    (a, b) and (b, a) are then disjoint and each distinct, so their
+    union is the symmetric closure without a second distinct."""
+    return (
+        edges.select(
+            F.least(F.col(src).cast("long"), F.col(dst).cast("long")).alias("a"),
+            F.greatest(F.col(src).cast("long"), F.col(dst).cast("long")).alias("b"),
+        )
+        .where(F.col("a").isNotNull() & (F.col("a") < F.col("b")))
         .distinct()
     )
 
@@ -87,32 +106,14 @@ def pagerank(
     # truncates the per-iteration lineage exactly as
     # connected_components does (cluster note: prefer checkpoint() with
     # a checkpoint dir, which survives executor loss).
-    e_raw = (
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Size the per-iteration shuffles to the MEASURED edge count (known
-    # free from the checkpoint materialization): at the session's
-    # fact-table partition count a sparse graph's per-round stages are
-    # mostly empty-task scheduling overhead. ~125k edges per partition
-    # (the rank-sum rounds do real CPU per edge, unlike kcore's cheap
-    # semi-join peels which keep 500k — interleaved A/B: pagerank
-    # 2.26->2.13 s, LPA 2.89->2.34 s at 125k, while kcore regressed
-    # 2.20->2.43 there), clamped to the session default, restored on
-    # exit.
+    e_raw = _sanitize_edges(edges, src, dst).localCheckpoint(eager=True)
+    # Shuffle width from the measured edge count (fitted_shuffle):
+    # ~125k edges per partition, as the rank-sum rounds do real CPU per
+    # edge, unlike kcore's cheap semi-join peels which keep 500k —
+    # interleaved A/B: pagerank 2.26->2.13 s, LPA 2.89->2.34 s at 125k,
+    # while kcore regressed 2.20->2.43 there.
     spark = edges.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    n_edges = e_raw.count()
-    fit = max(1, min(int(old_parts), n_edges // 125_000 + 1))
-    try:
-        spark.conf.set(conf_key, str(fit))
+    with fitted_shuffle(spark, e_raw.count(), 125_000) as fit:
         # Round-8 one-exchange layout (the label_propagation pattern:
         # localCheckpoint preserves partitioning in the LogicalRDD):
         # edges hash-partitioned on src ONCE; outdeg and nodes land on
@@ -142,8 +143,6 @@ def pagerank(
             return _pagerank_iterations(
                 e, nodes, outdeg, ranks, iterations, base, n, num, den
             )
-    finally:
-        spark.conf.set(conf_key, old_parts)
 
 
 def _pagerank_iterations(e, nodes, outdeg, ranks, iterations, base, n, num, den):
@@ -225,33 +224,16 @@ def label_propagation(
 
     Returns (node, community)."""
     # Canonicalize-then-mirror symmetrization (round 9, guide §2.4):
-    # distinct once on (least, greatest) pairs; the two mirrored halves
-    # are then DISJOINT and each internally distinct, so their union IS
-    # the symmetric closure — the former distinct over the 2|E|-row
-    # union (a second full exchange + aggregate) is gone, and the
-    # pinned frame holds |E| rows instead of 2|E|. Identical edge set
-    # by construction (symmetric closure only sees unordered pairs).
-    e0 = (
-        edges.select(
-            F.least(F.col(src).cast("long"), F.col(dst).cast("long")).alias("a"),
-            F.greatest(F.col(src).cast("long"), F.col(dst).cast("long")).alias("b"),
-        )
-        .where(F.col("a").isNotNull() & (F.col("a") < F.col("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Size the per-round shuffles to the MEASURED edge count (free from
-    # the checkpoint materialization) — the pagerank pattern: at the
-    # session's fact-table width a sparse graph's per-round stages are
-    # mostly empty-task scheduling overhead. 125k edges per partition,
-    # like pagerank: the per-round label-count aggregation is CPU-dense
-    # (see the divisor note there).
+    # distinct once on (least, greatest) pairs (_canonical_edges) — the
+    # former distinct over the 2|E|-row union (a second full exchange +
+    # aggregate) is gone, and the pinned frame holds |E| rows instead
+    # of 2|E|.
+    e0 = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
+    # Shuffle width from the measured mirrored edge count: 125k edges
+    # per partition, like pagerank, as the per-round label-count
+    # aggregation is CPU-dense (see the divisor note there).
     spark = edges.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    fit = max(1, min(int(old_parts), (2 * e0.count()) // 125_000 + 1))
-    try:
-        spark.conf.set(conf_key, str(fit))
+    with fitted_shuffle(spark, 2 * e0.count(), 125_000) as fit:
         e = (
             e0.select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .union(e0.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -289,8 +271,6 @@ def label_propagation(
                     # _pagerank_iterations)
                     .localCheckpoint(eager=False)
                 )
-    finally:
-        spark.conf.set(conf_key, old_parts)
     return labels.select("node", F.col("lab").alias("community"))
 
 
@@ -390,17 +370,11 @@ def triangle_counts(
     # pagerank/_static_rounds finding; interleaved A/B 3.02 -> 2.79 s).
     # Above the bound the t-keyed shuffle join KEEPS AQE for its skew
     # split of a celebrity sink node.
-    # Exception-safe conf scope (round 10, ADVICE): an AnalysisException
-    # while building deg/o/adj/pairs must still restore
-    # spark.sql.adaptive.enabled on the shared session — try/finally,
-    # like every other _static_rounds call site's `with` form.
-    _static = None
-    if m_edges <= int(broadcast_edge_bound):
-        from contextlib import ExitStack
-
-        _static = ExitStack()
-        _static.enter_context(_static_rounds(edges.sparkSession))
-    try:
+    with (
+        _static_rounds(edges.sparkSession)
+        if m_edges <= int(broadcast_edge_bound)
+        else nullcontext()
+    ):
         deg = (
             e0.select(F.col("u").alias("node"))
             .union(e0.select(F.col("v").alias("node")))
@@ -527,9 +501,6 @@ def triangle_counts(
             .groupBy("node")
             .agg(F.sum("c").alias("n_triangles"))
         )
-    finally:
-        if _static is not None:
-            _static.close()
     if m_edges <= int(broadcast_edge_bound):
         # the per-node count table is node-sized below the gate: a
         # broadcast attach keeps deg un-exchanged for the readout
@@ -589,31 +560,17 @@ def kcore(
     Returns (node, degree): survivors after `rounds` peels with their
     residual degree.
     """
-    e0 = (
-        edges.select(
-            F.least(F.col(src).cast("long"), F.col(dst).cast("long")).alias("a"),
-            F.greatest(F.col(src).cast("long"), F.col(dst).cast("long")).alias("b"),
-        )
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
+    e0 = _canonical_edges(edges, src, dst)
     e = (
         e0.select(F.col("a").alias("s"), F.col("b").alias("d"))
         .union(e0.select(F.col("b").alias("s"), F.col("a").alias("d")))
         .localCheckpoint(eager=True)
     )
-    # Size the per-round shuffles to the MEASURED edge count (the
-    # pagerank/LPA pattern): the peel rounds are I/O-light semi-joins,
-    # so at session width their stages are mostly empty-task
-    # scheduling overhead — and unlike the CPU-dense operators they
-    # must not widen when the AQE coalesce floor shrinks. ~500k edges
-    # per partition, clamped to the session default, restored on exit.
-    spark = e.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
+    # Shuffle width from the measured edge count: the peel rounds are
+    # I/O-light semi-joins, so ~500k edges per partition — unlike the
+    # CPU-dense operators they must not widen when the AQE coalesce
+    # floor shrinks.
     m = e.count()
-    fit = max(1, min(int(old_parts), m // 500_000 + 1))
     # Broadcast fast path (the triangle_counts precedent, same measured
     # gate): below the edge bound the per-round survivor set (<= #nodes
     # <= 2m longs) broadcasts, so each peel is map-side over the
@@ -636,13 +593,10 @@ def kcore(
     # broadcast build. The gate is on edges because the node count is
     # not known without an extra count barrier; 2m is the worst case.
     bc = m <= int(os.environ.get("XORQ_SPARK_KCORE_BC_EDGES", "4000000"))
-    try:
-        spark.conf.set(conf_key, str(fit))
+    with fitted_shuffle(e.sparkSession, m, 500_000) as fit:
         if bc:
             e = e.repartition(fit, "s").localCheckpoint(eager=True)
         return _kcore_body(e, k, rounds, k_percentile, bc=bc)
-    finally:
-        spark.conf.set(conf_key, old_parts)
 
 
 def _kcore_body(e, k, rounds, k_percentile, bc=False):
@@ -759,26 +713,11 @@ def bfs_hops(
     ``seeds``: a one-column DataFrame of node ids (any column name).
     """
     if directed:
-        e0 = (
-            edges.select(
-                F.col(src).cast("long").alias("src"),
-                F.col(dst).cast("long").alias("dst"),
-            )
-            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+        e0 = _sanitize_edges(edges, src, dst)
     else:
         # canonicalize-then-mirror: one distinct instead of two (the
         # label_propagation rewrite; identical symmetric closure)
-        c = (
-            edges.select(
-                F.least(F.col(src).cast("long"), F.col(dst).cast("long")).alias("a"),
-                F.greatest(F.col(src).cast("long"), F.col(dst).cast("long")).alias("b"),
-            )
-            .where(F.col("a").isNotNull() & (F.col("a") < F.col("b")))
-            .distinct()
-        )
+        c = _canonical_edges(edges, src, dst)
         e0 = c.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
             c.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
@@ -790,13 +729,9 @@ def bfs_hops(
         .select("node", F.lit(0).cast("long").alias("hops"))
         .localCheckpoint(eager=True)
     )
-    # measured-size shuffle width, the pagerank pattern
-    spark = edges.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    fit = max(1, min(int(old_parts), e.count() // 500_000 + 1))
-    try:
-        spark.conf.set(conf_key, str(fit))
+    # measured-size shuffle width: ~500k edges per partition, as each
+    # round is one frontier join plus a min-combinable groupBy
+    with fitted_shuffle(edges.sparkSession, e.count(), 500_000):
         for k in range(1, max_hops + 1):
             frontier = dist.where(F.col("hops") == k - 1)
             cand = (
@@ -812,8 +747,6 @@ def bfs_hops(
                 .agg(F.min("hops").alias("hops"))
                 .localCheckpoint(eager=False)
             )
-    finally:
-        spark.conf.set(conf_key, old_parts)
     return dist
 
 
@@ -849,16 +782,7 @@ def hits(
         # auth is only defined after the first half-iteration; the
         # final nodes⋈auth join would crash on auth=None.
         raise ValueError(f"hits() requires iterations >= 1, got {iterations}")
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
-        )
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _sanitize_edges(edges, src, dst).localCheckpoint(eager=True)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -872,10 +796,6 @@ def hits(
             F.lit(0).cast("long").alias("hub_scaled"),
             F.lit(0).cast("long").alias("auth_scaled"),
         )
-    spark = edges.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(conf_key)
-    fit = max(1, min(int(old_parts), e.count() // 500_000 + 1))
 
     def _l1_normalize(scores, col):
         # guard __tot = 0/NULL (degenerate half-iteration, e.g. all-zero
@@ -891,8 +811,9 @@ def hits(
 
     hub = nodes.select("node", F.lit(scale // n).cast("long").alias("h"))
     auth = None
-    try:
-        spark.conf.set(conf_key, str(fit))
+    # measured-size shuffle width: ~500k edges per partition, as each
+    # half-iteration is one join plus a combinable groupBy
+    with fitted_shuffle(edges.sparkSession, e.count(), 500_000):
         for _ in range(iterations):
             raw_a = (
                 e.join(hub.withColumnRenamed("node", "__u"), F.col("src") == F.col("__u"))
@@ -906,8 +827,6 @@ def hits(
                 .agg(F.sum("a").cast("long").alias("h"))
             )
             hub = _l1_normalize(raw_h, "h").localCheckpoint(eager=False)
-    finally:
-        spark.conf.set(conf_key, old_parts)
     return (
         nodes.join(hub, "node", "left")
         .join(auth, "node", "left")
@@ -946,15 +865,7 @@ def link_prediction(
     # mirrored halves are disjoint, and the SAME pinned frame serves
     # the und adjacency AND the existing-edge anti-join below — three
     # distinct exchanges collapse to one.
-    canon = (
-        edges.select(
-            F.least(F.col(src).cast("long"), F.col(dst).cast("long")).alias("a"),
-            F.greatest(F.col(src).cast("long"), F.col(dst).cast("long")).alias("b"),
-        )
-        .where(F.col("a").isNotNull() & (F.col("a") < F.col("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    canon = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
     und = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
@@ -1018,14 +929,7 @@ def random_walks(
     """
     # canonical distinct once (the label_propagation rewrite), and pin
     # the adjacency: every step's join re-read it — n_steps consumers.
-    c = (
-        edges.select(
-            F.least(F.col(src).cast("long"), F.col(dst).cast("long")).alias("a"),
-            F.greatest(F.col(src).cast("long"), F.col(dst).cast("long")).alias("b"),
-        )
-        .where(F.col("a").isNotNull() & (F.col("a") < F.col("b")))
-        .distinct()
-    )
+    c = _canonical_edges(edges, src, dst)
     und = c.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         c.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )

@@ -34,6 +34,8 @@ import math
 import struct
 from typing import Dict, List, Optional, Tuple
 
+import numpy as _np
+
 # ---------------------------------------------------------------------------
 # spec tables (ITU-T T.81 Annex K)
 # ---------------------------------------------------------------------------
@@ -319,18 +321,12 @@ def _fdct(block) -> List[float]:
 # and the multiply order ((value * c1) * c2) are exactly the scalar
 # loops', so every IEEE-754 intermediate — and therefore every rounded
 # output — is bit-identical to the scalar path (pinned by
-# tests/test_jpegcodec.py). numpy is optional: without it (or for a
-# single block, where vector overhead loses) the scalar loop runs.
+# tests/test_jpegcodec.py). For a single block, where vector overhead
+# loses, the scalar loop runs.
 # The scalar _idct's zero-skips (`if c == 0.0` / `if w`) only elide
 # +/-0.0 terms, which cannot change any finite accumulation's rounded
 # value, so the batched form may include them.
-try:
-    import numpy as _np
-
-    _COS_NP = None  # built lazily: _COS rows, float64, (8, 8) [x][u]
-except ImportError:  # pragma: no cover - numpy ships with pyspark
-    _np = None
-    _COS_NP = None
+_COS_NP = None  # built lazily: _COS rows, float64, (8, 8) [x][u]
 
 
 def _cos_np():
@@ -360,7 +356,7 @@ def _fdct_quant_many(raw_blocks, q) -> List[List[int]]:
     per-block `_fdct` + `int(round(coef[ZIGZAG[i]] / q[ZIGZAG[i]]))`
     (same single IEEE division; np.rint and Python round are both
     round-half-even)."""
-    if _np is None or len(raw_blocks) < 2:
+    if len(raw_blocks) < 2:
         out = []
         for b in raw_blocks:
             coef = _fdct(b)
@@ -376,7 +372,7 @@ def _fdct_quant_many(raw_blocks, q) -> List[List[int]]:
 
 def _idct_many(coefs) -> List[List[int]]:
     """Batched _idct: list of 64-int pixel rows per block; see note."""
-    if _np is None or len(coefs) < 2:
+    if len(coefs) < 2:
         return [_idct(c) for c in coefs]
     W = _np.asarray(coefs, dtype=_np.float64)
     C = _cos_np()

@@ -19,14 +19,21 @@ the whole upstream pipeline twice. Inputs that are not statable file
 scans (remote schemes, checkpointed/derived RDD frames) are treated as
 already-wide: the scale-safe default, and exactly the inputs the RDD
 probe mishandled.
+
+``fitted_shuffle(spark, rows, rows_per_partition)`` is the other
+direction: it narrows the shuffles of an iterative operator's rounds to
+a measured row count, for the scope of those rounds.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from typing import Optional
 
 from pyspark.sql import DataFrame
+
+from xorq_spark.session import scoped_conf
 
 
 def _conf_bytes(spark, key: str, default: int) -> int:
@@ -142,3 +149,23 @@ def widen(df: DataFrame, parallelism: Optional[int] = None) -> DataFrame:
     if n is None or n >= par:
         return df
     return df.repartition(par)
+
+
+@contextmanager
+def fitted_shuffle(spark, rows: int, rows_per_partition: int):
+    """Size the shuffles of an iterative operator's rounds to a MEASURED
+    row count: inside the scope ``spark.sql.shuffle.partitions`` is
+    ``fit = max(1, min(session width, rows // rows_per_partition + 1))``,
+    and the scope yields ``fit`` for explicit ``repartition(fit, ...)``
+    calls. At the session's fact-table width a sparse graph's per-round
+    stages are mostly empty-task scheduling overhead, and AQE's
+    coalescing does not reach across a checkpoint boundary; the clamp
+    keeps a large input at the session width. The session conf is put
+    back when the scope ends (``session.scoped_conf``). Callers count
+    ``rows`` from a frame they have already materialized, so the count
+    costs no extra scan, and choose ``rows_per_partition`` from how much
+    CPU a round spends per row."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    fit = max(1, min(width, rows // rows_per_partition + 1))
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(fit)):
+        yield fit

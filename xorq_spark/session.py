@@ -28,11 +28,19 @@ directory is the working directory, on PYTHONPATH or in site-packages);
 a daemon that fails to import would break every Python UDF. Cluster
 deployments that ship the package to executors opt in by setting
 ``spark.python.daemon.module=xorq_spark.pyworker`` themselves.
+
+Session conf: the session is shared, so an operator that needs a
+different setting changes it only through ``scoped_conf(spark, key,
+value)``, which puts the key back as it found it (unset stays unset)
+when the scope ends, on error too. ``static_compile`` (AQE off) and
+``operators.partitioning.fitted_shuffle`` (shuffle width from a
+measured row count) are built on it.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from typing import Optional
 
 from pyspark.sql import SparkSession
@@ -234,10 +242,24 @@ def _host_options(master: str) -> dict:
     }
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
+def scoped_conf(spark, key: str, value):
+    """Set session conf ``key`` to ``value`` for the ``with`` body, then
+    put it back as it was: the old value, or unset when it was unset
+    before (setting a default back would leave the key explicitly set
+    in ``spark.conf.getAll``). Restores on error too. Nested scopes on
+    one key unwind in order."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 def static_compile(spark):
     """Compile a bounded subplan with AQE OFF (guide §1.2 order note:
     config after algorithm). Under AQE every exchange becomes its own
@@ -249,13 +271,7 @@ def static_compile(spark):
     executes it as ONE job chain. Scope sections ONLY where every
     frame is bounded or already partition-fitted; leave scans and
     data-sized joins under AQE (skew split / coalesce)."""
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "false")
-        yield
-    finally:
-        spark.conf.set(key, old)
+    return scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
 class SessionConfig:

@@ -19,6 +19,7 @@ import uuid
 from typing import Callable, Optional, Sequence
 
 from xorq_spark.expr.core import Expr
+from xorq_spark.session import scoped_conf
 
 
 def tee(expr: Expr, path: str, spark=None, mode: str = "overwrite") -> Expr:
@@ -361,15 +362,7 @@ def overwrite_partitions(df, path: str, partition_by, mode_check: bool = True):
     partition_by = (
         [partition_by] if isinstance(partition_by, str) else list(partition_by)
     )
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "STATIC")
-    spark.conf.set(key, "dynamic")
-    try:
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(key, prev)
+    with scoped_conf(
+        df.sparkSession, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    ):
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
